@@ -42,6 +42,12 @@ _TRACKED_CHECKPOINTS: list[DataFrame] = []
 #: zero in tests/test_caching.py).
 _RELEASE_FAILURES = 0
 
+#: Running count of plain ``df.unpersist()`` calls (plan caches and
+#: ``release_after`` frames) that raised, e.g. on a stopped session:
+#: their blocks, if any, fall to the ContextCleaner. Kept apart from
+#: ``_RELEASE_FAILURES``, which counts checkpoint releases only.
+_UNPERSIST_FAILURES = 0
+
 #: callbacks fired after tracked checkpoints are released — the
 #: round-9 dead-memo fix: the registry memoizes built frames for
 #: consecutive same-query builds, and a released localCheckpoint is
@@ -211,10 +217,27 @@ def _release_frame(df: DataFrame) -> None:
                     stacklevel=3,
                 )
             return
-    try:
-        df.unpersist()
-    except Exception:  # session already stopped — nothing to free
-        pass
+    _unpersist([df])
+
+
+def _unpersist(frames: list[DataFrame]) -> None:
+    """``unpersist()`` each frame; failures move
+    ``_UNPERSIST_FAILURES`` and raise one warning per call."""
+    global _UNPERSIST_FAILURES
+    failed = 0
+    for df in frames:
+        try:
+            df.unpersist()
+        except Exception:  # stopped session / dead gateway
+            failed += 1
+    if failed:
+        _UNPERSIST_FAILURES += failed
+        warnings.warn(
+            f"{failed}/{len(frames)} plan-cache unpersist calls failed "
+            "(blocks deferred to the ContextCleaner)",
+            RuntimeWarning,
+            stacklevel=3,
+        )
 
 
 def release_plan_checkpoints() -> int:
@@ -260,11 +283,8 @@ def release_plan_caches() -> int:
     """Unpersist every tracked plan cache (+ checkpoints); returns
     how many were tracked."""
     n = len(_TRACKED) + len(_TRACKED_CHECKPOINTS)
-    while _TRACKED:
-        df = _TRACKED.pop()
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
+    frames = _TRACKED[:]
+    _TRACKED.clear()
+    _unpersist(frames)
     release_plan_checkpoints()
     return n

@@ -5,13 +5,29 @@ engine standardizes on columnar Parquet for everything analytic —
 vectorized scan, predicate pushdown, column pruning and partition
 pruning come free (SURVEY §2.1 "not present" row). CSV remains
 supported for the raw-incident edge via sources/csv_crimes.py.
+
+Schema memo: ``load_table``, ``load_events`` and ``events_stream``
+read with the schema from :func:`_schema`, because ``spark.read.parquet``
+without one runs a footer-inference Spark job on every read (80-95 ms
+on a small table, against 9-12 ms with a known schema). The memo keeps
+one entry per path, keyed on the Hadoop ``FileStatus`` length and
+modification time of the file (of every file under it, for a directory
+table), read through the session's JVM so any Hadoop URI works, and on
+the parquet confs that change what inference returns
+(``_INFER_CONFS``). A rewritten or replaced table, or a changed conf,
+re-infers. Values are Python ``StructType``s, so no py4j object
+outlives a gateway restart. Artifacts the engine writes itself
+(lakehouse tables, ANN indexes, exports) keep inferring on every read:
+mergeSchema and schema evolution live there.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import java_import
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -35,7 +51,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: path → (key, schema); see the module docstring
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _files(fs, status) -> list:
+    """(path, length, mtime) of the file ``status``, or of every file
+    under it for a directory."""
+    if not status.isDirectory():
+        path = status.getPath().toString()
+        return [(path, status.getLen(), status.getModificationTime())]
+    return [f for c in fs.listStatus(status.getPath()) for f in _files(fs, c)]
+
+
+def _schema(spark: SparkSession, path: str) -> StructType:
+    """The parquet schema at ``path``, inferred only on a memo miss."""
+    java_import(spark._jvm, "org.apache.hadoop.fs.Path")
+    root = spark._jvm.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    key = (
+        tuple(spark.conf.get(c) for c in _INFER_CONFS),
+        tuple(sorted(_files(fs, fs.getFileStatus(root)))),
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[path] = (key, schema)
+    return schema
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(_schema(spark, path)).parquet(path)
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -127,37 +184,8 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch read of events.parquet with ts normalized (see
     :func:`normalize_event_ts`)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = _read(spark, os.path.join(sf_dir, "events.parquet"))
     return normalize_event_ts(raw, check_key=sf_dir)
-
-
-#: (path, mtime_ns, size, nanosAsLong) → parquet schema. Every
-#: ``readStream`` needs the schema up front, and inferring it is a
-#: driver-side footer read (~0.1 s) paid per stream build — a query
-#: that starts two concurrent streams paid it twice per build (r11
-#: measurement). Keyed on the file's identity, its mtime/size (a
-#: rewritten file re-infers) and the schema-affecting conf (r12
-#: ADVICE hardening); bounded to one live entry per path.
-_STREAM_SCHEMAS: dict[tuple[str, int, int, str], "object"] = {}
-
-
-def _events_schema(spark: SparkSession, sf_dir: str):
-    path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(path)
-    # r12 (ADVICE): the inferred schema depends on nanosAsLong, so the
-    # conf value rides the key — a future caller with a different
-    # setting re-infers instead of being served a conf-mismatched
-    # schema. One entry per path (rewritten files evict their stale
-    # entry) bounds the dict.
-    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    abspath = os.path.abspath(path)
-    key = (abspath, st.st_mtime_ns, st.st_size, nanos)
-    schema = _STREAM_SCHEMAS.get(key)
-    if schema is None:
-        for stale in [k for k in _STREAM_SCHEMAS if k[0] == abspath]:
-            del _STREAM_SCHEMAS[stale]
-        schema = _STREAM_SCHEMAS[key] = spark.read.parquet(path).schema
-    return schema
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,15 +195,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     so batch-replay oracles agree."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = _schema(spark, os.path.join(sf_dir, "events.parquet"))
     raw = (
-        spark.readStream.schema(_events_schema(spark, sf_dir))
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
     return normalize_event_ts(raw)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

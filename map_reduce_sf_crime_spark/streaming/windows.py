@@ -21,7 +21,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -161,6 +161,31 @@ def window_counts_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumb.unionByName(slide)
 
 
+def _fused_windows(ts: Column) -> Column:
+    """The (kind, ws) window instances of ``ts`` for
+    :func:`window_counts_fused`: its 1-hour tumbling window and its two
+    1h/30min sliding windows. Starts are floored (``pmod``), as in
+    ``F.window``, so pre-1970 timestamps land in the same windows."""
+    us = F.unix_micros(ts)
+    h1 = 3_600_000_000  # 1 hour in microseconds
+    m30 = 1_800_000_000  # 30 minutes
+    s30 = us - F.pmod(us, F.lit(m30))
+    return F.array(
+        F.struct(
+            F.lit("tumbling").alias("kind"),
+            F.timestamp_micros(us - F.pmod(us, F.lit(h1))).alias("ws"),
+        ),
+        F.struct(
+            F.lit("sliding").alias("kind"),
+            F.timestamp_micros(s30).alias("ws"),
+        ),
+        F.struct(
+            F.lit("sliding").alias("kind"),
+            F.timestamp_micros(s30 - m30).alias("ws"),
+        ),
+    )
+
+
 def window_counts_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling + sliding window aggregates as ONE streaming query —
     the r12 fused form of :func:`window_counts_concurrent` (identical
@@ -186,28 +211,14 @@ def window_counts_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact; ``sum_value`` aggregates the identical per-group multiset
     of values (grouping is a bijection onto the originals' groups),
     verified to the same oracle hash at every gate SF."""
-    us = F.unix_micros(F.col("ts"))
-    h1 = 3_600_000_000  # 1 hour in microseconds
-    m30 = 1_800_000_000  # 30 minutes
-    s30 = us - us % m30
-    wins = F.array(
-        F.struct(
-            F.lit("tumbling").alias("kind"),
-            F.timestamp_micros(us - us % h1).alias("ws"),
-        ),
-        F.struct(
-            F.lit("sliding").alias("kind"),
-            F.timestamp_micros(s30).alias("ws"),
-        ),
-        F.struct(
-            F.lit("sliding").alias("kind"),
-            F.timestamp_micros(s30 - m30).alias("ws"),
-        ),
-    )
     ev = _events_stream(spark, sf_dir).select("ts", "event_type", "value")
     exploded = (
         ev.withWatermark("ts", "10 minutes")
-        .select(F.explode(wins).alias("_w"), "event_type", "value")
+        .select(
+            F.explode(_fused_windows(F.col("ts"))).alias("_w"),
+            "event_type",
+            "value",
+        )
         .select("_w.kind", "_w.ws", "event_type", "value")
     )
     agg = exploded.groupBy("kind", "ws", "event_type").agg(

@@ -193,3 +193,31 @@ def test_checkpoint_release_invalidates_registry_memo(spark):
     df2 = q(spark, SF_CHECK)
     assert df2 is not df1, "stale memo frame served after release"
     assert df2.count() == n1 > 0
+
+
+def test_failed_unpersist_is_counted_and_warned(spark):
+    """A plan-cache or ``release_after`` frame whose ``unpersist``
+    raises moves ``_UNPERSIST_FAILURES`` and warns once per call;
+    ``_RELEASE_FAILURES`` (checkpoint releases) does not move."""
+    import pytest
+
+    class Unpersistable:
+        def unpersist(self):
+            raise RuntimeError("session stopped")
+
+    caching.release_plan_caches()
+    unpersist0 = caching._UNPERSIST_FAILURES
+    release0 = caching._RELEASE_FAILURES
+
+    with pytest.warns(RuntimeWarning, match="unpersist") as record:
+        caching._release_frame(Unpersistable())
+    assert len(record) == 1
+    assert caching._UNPERSIST_FAILURES == unpersist0 + 1
+
+    caching._TRACKED.extend([Unpersistable(), Unpersistable()])
+    with pytest.warns(RuntimeWarning, match="2/2") as record:
+        assert caching.release_plan_caches() == 2
+    assert len(record) == 1
+    assert caching._UNPERSIST_FAILURES == unpersist0 + 3
+    assert not caching._TRACKED
+    assert caching._RELEASE_FAILURES == release0

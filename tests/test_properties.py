@@ -9,7 +9,8 @@ can't hide behind the fixtures.
 
 DuckDB-only on purpose (no Spark session): hundreds of hypothesis
 examples run in milliseconds here, where one Spark job each would
-take minutes.
+take minutes. The one exception pins a Spark expression against
+``F.window`` itself, with a few examples of many rows each.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ import math
 import re
 
 import duckdb
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from map_reduce_sf_crime_spark.functions.hashing import HEX_DIGITS, hash64_sql
@@ -267,3 +268,39 @@ def test_token_budget_quotas_sql_matches_mirror(rows, budget):
         base[k] += 1
     assert got == base
     assert sum(got.values()) == budget
+
+
+@given(
+    st.lists(
+        # 1900-01-01 .. 1970-01-01, in microseconds
+        st.integers(-2_208_988_800_000_000, 0), min_size=1, max_size=40
+    )
+)
+@example([-1, -1_800_000_001, -3_600_000_000])
+@settings(max_examples=12, deadline=None)
+def test_fused_windows_match_f_window_before_1970(spark, micros):
+    """streaming.windows._fused_windows assigns each event to the same
+    tumbling (1h) and sliding (1h/30min) window starts as F.window,
+    pre-1970 timestamps included (floor, not round toward zero)."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_sf_crime_spark.streaming.windows import _fused_windows
+
+    ev = spark.createDataFrame(list(enumerate(micros)), "id long, us long").select(
+        "id", F.timestamp_micros("us").alias("ts")
+    )
+    fused = ev.select("id", F.explode(_fused_windows(F.col("ts"))).alias("w")).select(
+        "id", "w.kind", F.unix_micros("w.ws")
+    )
+    windowed = ev.select(
+        "id", F.lit("tumbling"), F.unix_micros(F.window("ts", "1 hour").start)
+    ).unionAll(
+        ev.select(
+            "id",
+            F.lit("sliding"),
+            F.unix_micros(F.window("ts", "1 hour", "30 minutes").start),
+        )
+    )
+    assert sorted(map(tuple, fused.collect())) == sorted(
+        map(tuple, windowed.collect())
+    )
