@@ -24,6 +24,8 @@ consumed inside one eager write) should keep an explicit
 
 from __future__ import annotations
 
+import itertools
+import threading
 import warnings
 
 from pyspark.sql import DataFrame
@@ -59,6 +61,12 @@ _UNPERSIST_FAILURES = 0
 #: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on first use.
 _RELEASE_LISTENERS: list = []
 
+#: gateway identity tokens (:func:`gateway_key`): drawn once per
+#: gateway object, never reused within the process
+_GATEWAY_TOKENS = itertools.count(1)
+_GATEWAY_TOKEN_ATTR = "_sgraft_gateway_token"
+_GATEWAY_LOCK = threading.Lock()
+
 
 def gateway_key():
     """Identity of the live py4j gateway, for keying process-lifetime
@@ -66,14 +74,24 @@ def gateway_key():
     holds py4j JavaObjects, so a memo entry built against a torn-down
     gateway (spark.stop() + full relaunch, or a Connect/classic
     switch) would serve dead Java references with an opaque error.
-    Keying the memo on the gateway object's id makes a restarted JVM
-    re-build the expression instead. (One gateway serves the process
-    in every current deployment — the key changes only in the failure
-    case it exists to catch.)"""
+    Keying the memo on the gateway makes a restarted JVM re-build the
+    expression instead. The key is a per-process monotonic token
+    stamped on the gateway object the first time it is seen, not
+    ``id(gw)``: CPython reuses an id once its object is freed, so a
+    relaunched gateway could inherit the dead one's key. (One gateway
+    serves the process in every current deployment — the key changes
+    only in the failure case it exists to catch.)"""
     from pyspark import SparkContext
 
     gw = getattr(SparkContext, "_gateway", None)
-    return id(gw) if gw is not None else None
+    if gw is None:
+        return None
+    with _GATEWAY_LOCK:
+        token = getattr(gw, _GATEWAY_TOKEN_ATTR, None)
+        if token is None:
+            token = next(_GATEWAY_TOKENS)
+            setattr(gw, _GATEWAY_TOKEN_ATTR, token)
+    return token
 
 
 def on_release(callback) -> None:

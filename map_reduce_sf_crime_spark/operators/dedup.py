@@ -691,7 +691,7 @@ def apply_changes_to_signature_catalog(
     """Fold a lakehouse change feed (``sources.lakehouse.read_changes``
     vocabulary over a ``(doc_id, text, ...)`` table) into the
     persisted dedup signature catalog — the dedup twin of
-    ``apply_changes_to_ivf_index``. Without this, a deleted document
+    ``apply_changes_to_ann_index``. Without this, a deleted document
     keeps flagging tomorrow's crawl as duplicates of text that no
     longer exists, and an updated document matches on its STALE
     shingles.

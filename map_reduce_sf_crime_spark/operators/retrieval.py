@@ -262,7 +262,7 @@ def write_postings_index(
     ``(token, doc_id, dl, tf, gen)`` hash-bucketed on token, gen 0 =
     the base build, corpus totals as in-ledger sentinel rows (see
     ``STATS_TOKEN``) — the build-once/query-many form of BM25 serving
-    (the lexical mirror of write_ivf_index). One tokenize pass, ONE
+    (the lexical mirror of write_ann_index). One tokenize pass, ONE
     atomic table append; every later query reads only its terms'
     buckets, and :func:`apply_changes_to_postings_index` folds daily
     change-feed batches at batch cost (postings are per-(token, doc)

@@ -1,6 +1,7 @@
 """Similarity search over embedding columns.
 
-Four tiers, mirroring how a 100 TB pipeline actually deploys ANN:
+The LIVE tiers recompute from the corpus frame on every query,
+mirroring how a 100 TB pipeline actually deploys ANN:
 
 - **Brute-force top-k** (the correctness baseline): broadcast the
   (small) query set against the corpus, cosine per row via built-in
@@ -16,8 +17,25 @@ Four tiers, mirroring how a 100 TB pipeline actually deploys ANN:
   cosine re-rank inside the bucket. Approximate (recall measured in
   tests against brute force), linear-ish — the scale path.
 - **IVF**: coarse-quantizer inverted lists (deterministic first-k or
-  Lloyd-refined centroids), probe-and-rerank — the bucketed-layout
-  scale path (lists partition-pruned by ``centroid_id`` on disk).
+  Lloyd-refined centroids), probe-and-rerank.
+- **PQ-ADC**: product-quantized codes scored by asymmetric distance
+  against per-query tables, exact re-rank of the shortlist.
+- **SemDeDup**: cluster with the coarse quantizer, compare only
+  within a cluster.
+
+The PERSISTED tier is one index core (:func:`write_ann_index`): kinds
+``ivf``, ``pq``, ``ivfpq`` and ``ivfpq_residual`` share one life cycle
+(write, append, change-feed fold, tombstones, compaction, crash
+recovery) and one serve path in a latency (driver-list) and a bulk
+(DataFrame) shape; every later call reads the kind back from the
+artifacts under the index path. The exact re-rank of the PQ kinds
+reads either the live frame or the partitioned raw-vector store
+(:func:`write_vector_store`), its own artifact with its own fold.
+
+Every exact top-k ends in one rank window (:func:`_cosine_top_k`),
+every PQ-coded scan in one ADC kernel (:func:`_adc_top_s`) and one
+shortlist window (:func:`_shortlist`), and every IVF-family probe in
+one probe rule (:func:`_select_probes`).
 """
 
 from __future__ import annotations
@@ -84,30 +102,42 @@ def _bounded_collect(df: DataFrame, what: str, limit: int = MAX_COLLECT_ROWS):
     return rows
 
 
+def _cosine_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """THE rank window every exact top-k here ends in: score each
+    ``(query_id, vec_id)`` pair's query vector ``qv`` against its
+    ``embedding`` by exact cosine, rounded to 6 places like the SQL
+    twins, and keep the top ``k`` per query by (cosine desc, vec_id) —
+    one copy, so rounding, tie-breaks and output schema cannot drift
+    between the tiers and serve shapes."""
+    scored = pairs.select(
+        "query_id",
+        "vec_id",
+        F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "vec_id", "cosine", "rk")
+    )
+
+
+def _query_rows(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+    """The live tiers' query vectors: the corpus members named by
+    ``query_ids`` as ``(query_id, qv)``. Only these can ever match a
+    candidate join, so the tiers broadcast len(query_ids) rows, not
+    the corpus."""
+    return emb.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+
+
 def knn_bruteforce(
     emb: DataFrame, query_ids: list[int], k: int = 3
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector."""
-    q = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    pairs = (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    q = F.broadcast(_query_rows(emb, query_ids))
+    return _cosine_top_k(q.join(emb, F.col("vec_id") != F.col("query_id")), k)
 
 
 def knn_bruteforce_sql(query_ids: list[int], k: int = 3, dim: int = DIM) -> str:
@@ -363,6 +393,30 @@ def _argmax_lowest_id(cos, ids):
     )
 
 
+def _unit_rows(mat):
+    """Unit-normalize each row (zero rows stay zero). The 2-D
+    ``axis=1`` reduction sums each row in an order fixed by the row
+    length alone, so a row normalizes to the same bits whichever
+    matrix (or buffer layout) it arrives in — the property the
+    driver-built and executor-built distance tables rely on to agree
+    bit-for-bit."""
+    import numpy as np
+
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
+def _select_probes(qmat, cids, cmat, nprobe: int):
+    """THE probe rule of every IVF-family serve, live or persisted,
+    latency or bulk: each query's ``nprobe`` nearest centroids by the
+    exact-fold :func:`_seq_cosines`, ties to the earlier quantizer row
+    (stable argsort). Returns a ``(#queries, min(nprobe, K))`` array of
+    centroid ids."""
+    import numpy as np
+
+    order = np.argsort(-_seq_cosines(qmat, cmat), axis=1, kind="stable")
+    return np.asarray(cids)[order[:, :nprobe]]
+
+
 def ivf_assignments(
     emb: DataFrame,
     k: int = IVF_K,
@@ -532,16 +586,15 @@ def kmeans_centroids(
         )
         k = len(mat)
     cmat = mat[:k].copy()  # init = first-k by vec_id, zero extra scans
-    norm = lambda m: m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    x = norm(mat)
+    x = _unit_rows(mat)
     for _ in range(iters):
-        assign = (x @ norm(cmat).T).argmax(axis=1)
+        assign = (x @ _unit_rows(cmat).T).argmax(axis=1)
         for c in range(k):
             members = mat[assign == c]
             if len(members):
                 cmat[c] = members.mean(axis=0)
     if snap:
-        scores = x @ norm(cmat).T  # one pass: assignment AND medoid pick
+        scores = x @ _unit_rows(cmat).T  # one pass: assignment AND medoid pick
         assign = scores.argmax(axis=1)
         for c in range(k):
             members = np.flatnonzero(assign == c)
@@ -584,11 +637,10 @@ def ivf_topk(
     )
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     qmat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qcos = _seq_cosines(qmat, cmat)
     probes = [
         (int(q), int(c))
-        for qi, q in enumerate(qids)
-        for c in cids[np.argsort(-qcos[qi], kind="stable")[:nprobe]]
+        for q, row in zip(qids, _select_probes(qmat, cids, cmat, nprobe))
+        for c in row
     ]
     probe_df = spark.createDataFrame(probes, "query_id long, centroid_id long")
     # fast kernel like EVERY provided-centroid path — live, persisted
@@ -602,589 +654,12 @@ def ivf_topk(
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
     )
-    qv = (
-        # only the query vectors can ever match the candidate join —
-        # broadcast len(query_ids) rows, not the corpus
-        emb.filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    )
-    scored = (
-        cands.join(F.broadcast(qv), "query_id")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
-
-
-def write_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_centroids: int = IVF_K,
-    refine: bool = True,
-    centroids=None,
-) -> None:
-    """Persist the IVF index: the build-once/query-many production
-    form that :func:`ivf_topk`'s docstring promises ("at 100 TB the
-    lists would be written bucketed by centroid_id so the probe is a
-    partition-pruned scan, not a join"). Two artifacts:
-
-    - ``{path}/centroids`` — the tiny quantizer (centroid_id,
-      embedding), one file;
-    - ``{path}/lists`` — the corpus vectors hive-PARTITIONED by
-      ``(centroid_id, append_id)``: a probe reads only its nprobe
-      top-level directories (partition pruning), never scanning or
-      shuffling the other lists. The build lands as ``append_id=0``;
-      daily batches fold in as higher ids via
-      :func:`append_ivf_index` without rewriting the base.
-
-    ``centroids``: optional precomputed (ids, matrix) quantizer —
-    overrides ``refine`` (used by rebuild-equality tests and by
-    callers that version the quantizer separately).
-
-    ``refine`` DEFAULTS to True (round 8): the production build
-    trains the Lloyd-refined quantizer (:func:`kmeans_centroids`,
-    bounded driver-side sample — the ``pq_codebooks`` discipline).
-    First-k centroids on real Zipfian embeddings give unbalanced
-    inverted lists, which degrades both the probe's pruned fraction
-    and recall at fixed nprobe — the two numbers the partition-pruned
-    serving story rests on (skew measured first-k vs refined in
-    BASELINE.md's round-8 quantizer table). ``refine=False`` keeps
-    the deterministic first-k quantizer the SQL oracle mirrors.
-
-    Mirrors the persisted dedup signature catalog (IC1): index build
-    cost is paid once; each query batch touches ≈ nprobe/k of the
-    corpus by layout alone.
-    """
-    spark = emb.sparkSession
-    if centroids is not None:
-        cids, cmat = centroids
-    else:
-        cids, cmat = (
-            kmeans_centroids(emb, n_centroids)
-            if refine
-            else _centroids(emb, n_centroids)
-        )
-    cdf = spark.createDataFrame(
-        [(int(c), [float(x) for x in cmat[i]]) for i, c in enumerate(cids)],
-        "centroid_id long, embedding array<double>",
-    )
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    # no tombstone clear needed: the STATIC lists overwrite below
-    # truncates the dir, embedded _tombstones included
-    # one pass: the assignment kernel carries the vector through, so
-    # the lists write needs no second corpus scan or vec_id join
-    lists = ivf_assignments(
-        emb, n_centroids, centroids=(cids, cmat), with_embedding=True
-    )
-    # STATIC overwrite pinned explicitly: a rebuild must truncate the
-    # whole lists tree — under a session-level dynamic default, stale
-    # append_id>0 partitions from the previous layout would survive
-    # next to the fresh quantizer's lists and silently duplicate
-    _write_list_partitions(
-        lists.withColumn("append_id", F.lit(0)), f"{path}/lists", static=True
-    )
-
-
-def _stored_centroids(spark, path: str):
-    """Load a persisted index's quantizer as the (ids, matrix) pair
-    the assignment/probe kernels take."""
-    import numpy as np
-
-    crows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    cids = np.array([r["centroid_id"] for r in crows], dtype=np.int64)
-    cmat = np.array([r["embedding"] for r in crows], dtype=np.float64)
-    return cids, cmat
-
-
-def append_ivf_index(batch: DataFrame, path: str, append_id: int) -> None:
-    """The ANN serving tier's daily loop (the index twin of
-    ``dedup.append_signature_catalog``): assign a NEW embedding batch
-    against the index's STORED quantizer — never retrained, so
-    existing lists and every past probe stay valid — and land it as
-    the batch's own ``append_id`` partitions under each touched
-    centroid directory. Cost is one narrow assignment map over the
-    batch plus a batch-sized write; the base corpus is never re-read
-    or rewritten, and probes keep partition-pruning on ``centroid_id``
-    (the top-level directory) exactly as before.
-
-    ``append_id`` identifies the batch (> 0; the base build owns 0)
-    and makes replay IDEMPOTENT by layout: assignment is
-    deterministic, so a crashed-and-re-run append dynamically
-    overwrites exactly its own ``(centroid_id, append_id)``
-    directories with identical content — the staged-delta discipline
-    of ``streaming/materialize.py``. Appending the same batch under
-    TWO DIFFERENT ids is caller error (vectors would duplicate in the
-    lists); queries do not dedup. Query equality with a same-quantizer
-    one-shot rebuild and replay idempotence are pinned in
-    tests/test_similarity.py. Centroid drift as the corpus grows
-    degrades recall, not correctness — rebuild (or re-``refine``) the
-    quantizer on a maintenance cadence, which is a full
-    :func:`write_ivf_index` with a fresh ``append_id=0`` layout."""
-    if append_id <= 0:
-        raise ValueError(
-            f"append_id must be > 0 (got {append_id}); 0 is the base build"
-        )
-    spark = batch.sparkSession
-    lists = ivf_assignments(
-        batch, centroids=_stored_centroids(spark, path), with_embedding=True
-    )
-    _write_list_partitions(
-        lists.withColumn("append_id", F.lit(append_id)), f"{path}/lists"
-    )
-
-
-def _write_list_partitions(df: DataFrame, dest: str, static: bool = False):
-    """Write a ``(…, centroid_id, append_id)`` frame as the serving
-    layout: hive-partitioned AND first repartitioned by
-    ``centroid_id``, so each list directory receives files from ONE
-    task — one file per (list, write), not one per (list, shuffle
-    task). This is load-bearing, measured in round 8: without the
-    repartition, a K=512 build from 32 tasks left 16k+ files under
-    ``lists/`` and the probe's FILE LISTING cost (3.6–14 s) dwarfed
-    everything the partition pruning saved; with it the tree holds
-    one file per non-empty list. One extra shuffle of the compact
-    payload (16-byte codes / raw vectors) paid at BUILD time — the
-    build-once/serve-many trade this index exists for. A pathological
-    hot list still lands in one task/file; at sizes where one list
-    outgrows a task, the centroid count is undersized for the corpus
-    (the K ∝ √N rule) — fix K, not the writer."""
-    mode = "static" if static else "dynamic"
-    (
-        df.repartition(F.col("centroid_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", mode)
-        .partitionBy("centroid_id", "append_id")
-        .parquet(dest)
-    )
-
-
-_TOMBSTONES = "_tombstones"
-#: read_changes vocabulary → which side of the index fold each event
-#: lands on (pre-images and deletes kill the stored copy; post-images
-#: and inserts are the batch to append).
-
-
-def tombstone_index(
-    spark, path: str, vec_ids, append_id: int, sub: str = "lists"
-) -> None:
-    """Mark corpus vectors DEAD for every index generation before
-    ``append_id`` — the delete/update half of the persisted ANN
-    serving loop (IVF lists and PQ codes share the ``append_id``
-    partition convention, so one tombstone layout serves both).
-
-    A tombstone row lands under ``{path}/{sub}/_tombstones/append_id=N``
-    (``sub`` = the data dir it governs: ``lists`` for IVF, ``codes``
-    for PQ; the underscore prefix hides it from the parquet scans of
-    the enclosing dir) and kills matching ``vec_id`` rows with
-    ``append_id < N`` at probe time. Living INSIDE the data dir is
-    load-bearing: a rebuild's static overwrite and a compaction's
-    rename-swap replace data and tombstones in ONE atomic directory
-    operation, so no crash ordering can pair fresh rows with stale
-    tombstones. GENERATION SCOPING is the point: the same batch's own
-    re-insert (an update's post-image appended under the same id) and
-    any later re-insert survive their own tombstone, so delete +
-    re-add compose without ever rewriting the base lists. Replay is
-    idempotent by the same layout rule as the appends — a re-run
-    dynamically overwrites exactly its own partition with identical
-    content. The set is churn-sized (bounded by deletes + updates,
-    never corpus size), which is why the probe-side filter may
-    broadcast it; a rebuild (``write_ivf_index`` / ``write_pq_index``)
-    clears it along with the lists."""
-    if append_id <= 0:
-        raise ValueError(
-            f"append_id must be > 0 (got {append_id}); 0 is the base build"
-        )
-    if not isinstance(vec_ids, DataFrame):
-        vec_ids = spark.createDataFrame(
-            [(int(v),) for v in vec_ids], "vec_id long"
-        )
-    (
-        vec_ids.select("vec_id")
-        .distinct()
-        .withColumn("append_id", F.lit(append_id))
-        .repartition(1)  # churn-sized by contract: one file per batch
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("append_id")
-        .parquet(f"{path.rstrip('/')}/{sub}/{_TOMBSTONES}")
-    )
-
-
-def _read_probed_lists(
-    spark, path: str, probe_cids, sub: str = "lists"
-) -> DataFrame:
-    """Read ONLY the probed ``centroid_id=…`` directories, as explicit
-    paths under ``basePath`` — partition pruning applied at FILE
-    DISCOVERY time, not after it. Round-8 measurement: reading the
-    whole tree and filtering (`read.parquet(lists).filter(isin)`)
-    costs ~2 s at K=512 before a single row moves — 512 partition dirs
-    exceed ``spark.sql.sources.parallelPartitionDiscovery.threshold``
-    (32), so Spark launches a distributed LISTING JOB over directories
-    the filter then throws away; the flat PQ table's one-dir scan of
-    19× more rows took 0.2 s. Listing only the nprobe-union
-    directories keeps discovery driver-side and proportional to the
-    probe, which is the entire point of the layout. The redundant
-    ``isin`` filter stays upstream so the scan still carries an
-    explicit PartitionFilter (plan-asserted in tests) and stray files
-    under a foreign directory can never leak in. Probed ids whose
-    list is EMPTY (the refined quantizer leaves some) have no
-    directory — they are skipped by the existence check; if none
-    exist, falls back to the full-tree read (correct, just unpruned,
-    and only reachable when every probed list is empty)."""
-    from ..sources.lakehouse import _hfs
-
-    base = f"{path.rstrip('/')}/{sub}"
-    fs, jvm = _hfs(spark, base)
-    P = jvm.org.apache.hadoop.fs.Path
-    dirs = [
-        d
-        for c in probe_cids
-        if fs.exists(P(d := f"{base}/centroid_id={c}"))
-    ]
-    # a wide probe union (big query batch × nprobe) can exceed the
-    # default discovery threshold (32) on its own — keep even that
-    # listing driver-side (raise-only, lock-guarded; same contract as
-    # the store read)
-    _raise_discovery_threshold(spark, len(dirs) + 1)
-    reader = spark.read.option("basePath", base)
-    rows = reader.parquet(*dirs) if dirs else spark.read.parquet(base)
-    return rows.filter(F.col("centroid_id").isin(list(probe_cids)))
-
-
-def _filter_tombstones(
-    spark, path: str, rows: DataFrame, sub: str = "lists"
-) -> DataFrame:
-    """Probe-side tombstone filter: drop index rows whose ``vec_id``
-    is dead as of a generation AFTER the row's own ``append_id``.
-    No-op when the index has none. One broadcast left join against
-    the churn-sized max-generation set — the pruned lists/codes scan
-    is never shuffled."""
-    from ..sources.lakehouse import _hfs
-
-    fs, jvm = _hfs(spark, path)
-    tpath = f"{path.rstrip('/')}/{sub}/{_TOMBSTONES}"
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(tpath)):
-        return rows
-    dead = (
-        spark.read.parquet(tpath)
-        .groupBy("vec_id")
-        .agg(F.max("append_id").alias("_dead_as_of"))
-    )
-    return (
-        rows.join(F.broadcast(dead), "vec_id", "left")
-        .filter(
-            F.col("_dead_as_of").isNull()
-            | (F.col("append_id") >= F.col("_dead_as_of"))
-        )
-        .drop("_dead_as_of")
-    )
-
-
-def _split_changes(changes: DataFrame, id_col: str, emb_col: str):
-    dead = changes.filter(
-        F.col("_change_type").isin(*CDF_DEAD_TYPES)
-    ).select(F.col(id_col).alias("vec_id"))
-    live = changes.filter(
-        F.col("_change_type").isin(*CDF_LIVE_TYPES)
-    ).select(F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding"))
-    return dead, live
-
-
-def apply_changes_to_ivf_index(
-    spark,
-    path: str,
-    changes: DataFrame,
-    append_id: int,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> None:
-    """Fold a lakehouse change feed (``sources.lakehouse.read_changes``
-    vocabulary) into a persisted IVF index as ONE replay-idempotent
-    batch: deletes + update pre-images tombstone the stored copies,
-    inserts + update post-images append under the same ``append_id``.
-    After the fold a probe sees exactly the post-snapshot corpus —
-    pinned in tests/test_similarity.py against a same-quantizer
-    rebuild from the post-change table. Cost is churn-sized on both
-    legs (one narrow assignment map + two batch-sized writes); the
-    base lists are never re-read or rewritten — the index twin of the
-    feed's own contract that incremental work reads the churn, not
-    the table. The feed is localCheckpoint-ed first: its plan is a
-    snapshot join, and the two probes + two writes below would
-    otherwise re-run it four times."""
-    changes = changes.localCheckpoint()
-    dead, live = _split_changes(changes, id_col, emb_col)
-    if dead.take(1):
-        tombstone_index(spark, path, dead, append_id, sub="lists")
-    if live.take(1):
-        append_ivf_index(live, path, append_id)
-
-
-def apply_changes_to_pq_index(
-    spark,
-    path: str,
-    changes: DataFrame,
-    append_id: int,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> None:
-    """PQ twin of :func:`apply_changes_to_ivf_index`: same fold, same
-    replay contract, with the live half encoded by the index's stored
-    codebooks via :func:`append_pq_index`."""
-    changes = changes.localCheckpoint()
-    dead, live = _split_changes(changes, id_col, emb_col)
-    if dead.take(1):
-        tombstone_index(spark, path, dead, append_id, sub="codes")
-    if live.take(1):
-        append_pq_index(live, path, append_id)
-
-
-def compact_ivf_index(spark, path: str) -> None:
-    """Maintenance rewrite for a persisted IVF index that has
-    accumulated change-feed folds: fold every ``append_id``
-    generation back into the base (``append_id=0``), physically
-    removing tombstoned rows — after which probes drop the broadcast
-    tombstone join, and the partition-directory count collapses back
-    to one per centroid (a year of daily folds otherwise leaves 365
-    ``append_id`` dirs under every touched centroid).
-
-    Atomicity: tombstones live INSIDE ``lists/`` (``_tombstones``,
-    hidden from parquet scans), so the rename swap replaces data and
-    tombstones in one directory operation — no interleaving of crash
-    and probe can pair the merged gen-0 rows with stale tombstones.
-    A crash in the rename gap leaves the index momentarily unreadable
-    (never wrong), and :func:`recover_index_compaction` finishes or
-    discards the rewrite; every residue state is pinned in
-    tests/test_similarity.py. Single maintainer assumed (probes are
-    read-only and safe throughout; concurrent compactions are the
-    caller's corruption, same as lakehouse writers without the lease).
-
-    Like every line-truncating rewrite here (catalog rebuilds,
-    ``compact_term_stats``), compaction closes the REPLAY window:
-    re-running a pre-compaction fold afterwards would re-append its
-    batch as duplicates. Cost: one scan + write of the LIVE rows — no
-    assignment recompute, no shuffle (hive layout keeps
-    file-to-partition locality; input coalescing merges the small
-    per-fold files)."""
-    _compact_index_dir(spark, path, "lists", ("centroid_id",))
-
-
-def compact_pq_index(spark, path: str) -> None:
-    """PQ twin of :func:`compact_ivf_index` over the ``codes`` table;
-    same atomic-swap contract, no re-encode."""
-    _compact_index_dir(spark, path, "codes", ())
-
-
-def _compact_index_dir(
-    spark, path: str, sub: str, part_cols: tuple[str, ...]
-) -> None:
-    from ..sources.lakehouse import _hfs
-
-    root = path.rstrip("/")
-    recover_index_compaction(spark, path, sub)
-    fs, jvm = _hfs(spark, root)
-    P = jvm.org.apache.hadoop.fs.Path
-    rows = _filter_tombstones(
-        spark, root, spark.read.parquet(f"{root}/{sub}"), sub
-    ).withColumn("append_id", F.lit(0))
-    # the .compact dir carries merged gen-0 rows and NO _tombstones —
-    # the swap below retires both the old rows and the old tombstones
-    # in one rename. Centroid-partitioned trees re-cluster to one file
-    # per list (_write_list_partitions — compaction is exactly the
-    # moment to reclaim file-count amplification); the flat code table
-    # keeps input-coalesced tasks (one dir, file count already small).
-    if "centroid_id" in part_cols:
-        _write_list_partitions(rows, f"{root}/{sub}.compact", static=True)
-    else:
-        rows.write.mode("overwrite").partitionBy(
-            *part_cols, "append_id"
-        ).parquet(f"{root}/{sub}.compact")
-    if not fs.rename(P(f"{root}/{sub}"), P(f"{root}/{sub}.old")):
-        raise IOError(f"compact: rename {sub} -> {sub}.old failed")
-    if not fs.rename(P(f"{root}/{sub}.compact"), P(f"{root}/{sub}")):
-        raise IOError(f"compact: rename {sub}.compact -> {sub} failed")
-    fs.delete(P(f"{root}/{sub}.old"), True)
-
-
-def recover_index_compaction(spark, path: str, sub: str) -> str:
-    """Resolve any crash residue of :func:`compact_ivf_index` /
-    :func:`compact_pq_index` — idempotent, also runs as the
-    compactors' own pre-clean. Returns what it did."""
-    from ..sources.lakehouse import _hfs
-
-    root = path.rstrip("/")
-    fs, jvm = _hfs(spark, root)
-    P = jvm.org.apache.hadoop.fs.Path
-    live, old, cmp_ = (
-        fs.exists(P(f"{root}/{sub}")),
-        fs.exists(P(f"{root}/{sub}.old")),
-        fs.exists(P(f"{root}/{sub}.compact")),
-    )
-    if live and not old:
-        if cmp_:  # crashed mid/post write, before any rename
-            fs.delete(P(f"{root}/{sub}.compact"), True)
-            return "discarded partial rewrite"
-        return "clean"
-    if not live and old and cmp_:  # crashed between the two renames
-        if not fs.rename(P(f"{root}/{sub}.compact"), P(f"{root}/{sub}")):
-            raise IOError(f"recover: rename {sub}.compact -> {sub} failed")
-        fs.delete(P(f"{root}/{sub}.old"), True)
-        return "finished swap"
-    if live and old:  # crashed before cleanup
-        fs.delete(P(f"{root}/{sub}.old"), True)
-        return "finished cleanup"
-    raise RuntimeError(
-        f"unrecoverable index state at {root}/{sub}: "
-        f"live={live} old={old} compact={cmp_}"
-    )
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 3,
-    nprobe: int = IVF_NPROBE,
-    exclude_query_ids: bool = True,
-) -> DataFrame:
-    """Query a persisted IVF index (:func:`write_ivf_index`) with
-    EXTERNAL query vectors — the serving shape, where queries are new
-    embeddings rather than corpus members. The centroid read is one
-    tiny file; probe selection happens on the driver against the
-    broadcast-size quantizer; the list scan is partition-pruned to
-    the union of probed ``centroid_id`` directories. Same scoring and
-    tie-break as :func:`ivf_topk` (exact cosine re-rank, rank by
-    cosine desc then vec_id), so querying the index with a corpus
-    member's own vector returns bit-identical neighbors — pinned in
-    tests/test_similarity.py. External queries live in their OWN id
-    namespace: pass ``exclude_query_ids=False`` so a query id that
-    happens to collide with a corpus ``vec_id`` does not silently drop
-    that corpus vector from its results (True matches the live
-    corpus-member semantics)."""
-    import numpy as np
-
-    cids, cmat = _stored_centroids(spark, path)
-    qids = np.array([q for q, _ in queries], dtype=np.int64)
-    qmat = np.array([v for _, v in queries], dtype=np.float64)
-    qcos = _seq_cosines(qmat, cmat)
-    probes = [
-        (int(q), int(c))
-        for qi, q in enumerate(qids)
-        for c in cids[np.argsort(-qcos[qi], kind="stable")[:nprobe]]
-    ]
-    probe_df = spark.createDataFrame(probes, "query_id long, centroid_id long")
-    probe_cids = sorted({c for _, c in probes})
-    lists = _filter_tombstones(
-        spark,
-        path,
-        _read_probed_lists(spark, path, probe_cids),
-        sub="lists",
-    )
-    self_filter = (
-        (F.col("vec_id") != F.col("query_id"))
-        if exclude_query_ids
-        else F.lit(True)
-    )
-    # cast to the corpus element type so scoring arithmetic is
-    # bit-identical with the live path (float→double→float is exact);
-    # schema from the already-discovered pruned frame — a fresh
-    # read.parquet here would re-list the whole tree
-    elem_t = lists.schema["embedding"].dataType
-    qv = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in queries],
-        "query_id long, qv array<double>",
-    ).select("query_id", F.col("qv").cast(elem_t).alias("qv"))
-    scored = (
-        lists.join(F.broadcast(probe_df), "centroid_id")
-        .filter(self_filter)
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
-
-
-def ivf_topk_bulk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 3,
-    nprobe: int = IVF_NPROBE,
-    exclude_query_ids: bool = True,
-) -> DataFrame:
-    """BULK serve of the persisted IVF index: ``queries`` is a
-    DataFrame ``(query_id, embedding)`` — the THROUGHPUT shape next
-    to :func:`ivf_topk_indexed`'s driver-list latency shape, same
-    algorithm, BIT-IDENTICAL results (pinned in
-    tests/test_similarity.py).
-
-    Phases mirror :func:`ivfpq_topk_bulk` steps 1-2: probe via the
-    shared :func:`_bulk_probe_frame` (no collect), candidates via a
-    co-partitioned ``centroid_id`` join against the PARTITION-PRUNED
-    lists (the probed-centroid collect is quantizer-bounded ≤ K).
-    IVF lists carry raw vectors, so scoring is the exact cosine
-    directly on the joined rows — the carried ``qemb`` replaces the
-    latency path's broadcast query join, cast to the corpus element
-    type so the arithmetic is the same JVM expression. No shortlist,
-    no re-rank: one window takes top-k per query. Measured
-    (BASELINE.md round-10 flat-tier table): parity with the latency
-    API at 2k queries, 1.2× at 16k and widening — both sides are the
-    same JVM join, so the bulk win is only the driver-built probe
-    list and broadcast the latency path re-pays per batch.
-
-    Same DETERMINISTIC-``queries`` contract as
-    :func:`ivfpq_topk_bulk` (the probe distinct-collect and the serve
-    are separate passes over the query frame)."""
-    cids, cmat = _stored_centroids(spark, path)
-    probes = _bulk_probe_frame(queries, cids, cmat, nprobe)
-    probe_cids = sorted(
-        int(r.centroid_id)
-        for r in probes.select("centroid_id").distinct().collect()
-    )
-    lists = _filter_tombstones(
-        spark, path, _read_probed_lists(spark, path, probe_cids), sub="lists"
-    )
-    self_filter = (
-        (F.col("vec_id") != F.col("query_id"))
-        if exclude_query_ids
-        else F.lit(True)
-    )
-    elem_t = lists.schema["embedding"].dataType
-    scored = (
-        lists.join(probes, "centroid_id")
-        .filter(self_filter)
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                cosine_col(F.col("qemb").cast(elem_t), F.col("embedding")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
+    qv = _query_rows(emb, query_ids)
+    return _cosine_top_k(
+        cands.join(F.broadcast(qv), "query_id").join(
+            emb.select("vec_id", "embedding"), "vec_id"
+        ),
+        k,
     )
 
 
@@ -1228,27 +703,10 @@ def ann_lsh_topk(
         .select("query_id", "vec_id")
         .distinct()
     )
-    qv = (
-        # only the query vectors can ever match the candidate join —
-        # broadcast len(query_ids) rows, not the corpus
-        emb.filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    )
+    qv = _query_rows(emb, query_ids)
     cv = emb.select("vec_id", "embedding")
-    scored = (
-        cands.join(F.broadcast(qv), "query_id")
-        .join(cv, "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
+    return _cosine_top_k(
+        cands.join(F.broadcast(qv), "query_id").join(cv, "vec_id"), k
     )
 
 
@@ -1357,10 +815,7 @@ def _train_matrix(emb: DataFrame, train_rows: int):
 
 def _train_sample(emb: DataFrame, train_rows: int):
     """Unit-normalized training matrix (see :func:`_train_matrix`)."""
-    import numpy as np
-
-    mat = _train_matrix(emb, train_rows)
-    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    return _unit_rows(_train_matrix(emb, train_rows))
 
 
 def _lloyd_blocks(x, m: int, ksub: int, iters: int):
@@ -1400,11 +855,7 @@ def _normalized_centroid_lookup(centroids):
     cids, cmat = centroids
     order = np.argsort(cids)
     scids = np.asarray(cids, dtype=np.int64)[order]
-    scmat = np.asarray(cmat, dtype=np.float64)[order]
-    scmat = scmat / np.maximum(
-        np.linalg.norm(scmat, axis=1, keepdims=True), 1e-12
-    )
-    return scids, scmat
+    return scids, _unit_rows(np.asarray(cmat, dtype=np.float64)[order])
 
 
 def residual_codebooks(
@@ -1469,10 +920,7 @@ def pq_encode(
             if not len(pdf):
                 continue  # np.array(list(...)) on an empty batch → shape (0,)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            x = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
+            x = _unit_rows(np.array(list(pdf["embedding"]), dtype=np.float64))
             if look is not None:
                 scids, scmat = look
                 batch_cids = pdf["centroid_id"].to_numpy(dtype=np.int64)
@@ -1531,45 +979,86 @@ def _pq_dtabs(books, qx):
     )
 
 
-def _adc_scan(
-    codes: DataFrame, qids, dtabs, top_s: int, exclude_query_ids: bool = True
-) -> DataFrame:
-    """Asymmetric-distance scan of a (vec_id, pq_codes) frame against
-    broadcast per-query distance tables, emitting each task's local
-    top-``top_s`` per query (the global top-S is a subset of the union
-    of per-task top-S, so the downstream per-query ranking window sees
-    #tasks·S rows, never the corpus). Shared by the live
-    :func:`pq_topk` and the persisted-index :func:`pq_topk_indexed`."""
+#: what every ADC emitter yields: task-local top-S rows per query
+_ADC_SCHEMA = "query_id long, vec_id long, adist double"
+
+
+def _adc_top_s(ids, cds, tabs, groups, topn: int, excl: bool):
+    """THE ADC scoring + per-query top-S kernel every PQ-coded serve
+    runs inside its tasks — live or persisted, flat or probed, latency
+    or bulk. ``ids``/``cds`` are one batch's vec_ids and (n, m) codes;
+    ``groups`` yields ``(q, rows, tix)``: query ``q``'s candidate rows
+    of the batch (a slice or index array) and the index in ``tabs`` of
+    their distance table — one int (a table per query: flat codes) or
+    an int per row (residual codes: a table per (query, probed list)).
+
+    A row's asymmetric distance gathers its table's per-block entries
+    at its codes and sums them across blocks; the query's own id is
+    dropped when ``excl``; the (adist, vec_id) lexicographic order
+    keeps ties exact; the first ``topn`` rows leave as a (query_id,
+    vec_id, adist) frame. The global top-S is a subset of the union of
+    per-task top-S, so the shortlist window downstream sees #tasks·S
+    rows per query, never the corpus."""
     import numpy as np
     import pandas as pd
 
-    spark = codes.sparkSession
-    bc = spark.sparkContext.broadcast((qids, dtabs, top_s, exclude_query_ids))
+    blocks = np.arange(cds.shape[1])[None, :]
+    for q, rows, tix in groups:
+        b_ids = ids[rows]
+        ad = tabs[np.asarray(tix)[..., None], blocks, cds[rows]].sum(axis=1)
+        if excl:
+            keep = b_ids != q
+            b_ids, ad = b_ids[keep], ad[keep]
+        sel = np.lexsort((b_ids, ad))[:topn]
+        yield pd.DataFrame(
+            {
+                "query_id": np.full(len(sel), q, dtype=np.int64),
+                "vec_id": b_ids[sel],
+                "adist": ad[sel],
+            }
+        )
+
+
+def _shortlist(scored: DataFrame, top_s: int) -> DataFrame:
+    """THE shortlist window over the ADC emitters' task-local top-S
+    rows: the ``top_s`` smallest asymmetric distances per query in
+    (adist, vec_id) order — total, so the shortlist is deterministic
+    under any partitioning."""
+    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
+    return (
+        scored.withColumn("ark", F.row_number().over(w))
+        .filter(F.col("ark") <= top_s)
+        .select("query_id", "vec_id")
+    )
+
+
+def _adc_flat_scan(
+    codes: DataFrame, qids, tabs, top_s: int, excl: bool = True
+) -> DataFrame:
+    """ADC scan of a flat ``(vec_id, pq_codes)`` frame: every row is
+    scored for every query against the broadcast per-query distance
+    tables ``tabs`` (:func:`_pq_dtabs`), emitting each task's local
+    top-``top_s`` per query through :func:`_adc_top_s`. Shared by the
+    live :func:`pq_topk` and the ``pq`` latency serve."""
+    import numpy as np
+
+    bc = codes.sparkSession.sparkContext.broadcast((qids, tabs, top_s, excl))
 
     def adc(batches):
-        q_ids, tabs, topn, excl = bc.value
+        q_ids, tabs_, topn, excl_ = bc.value
         for pdf in batches:
             if not len(pdf):
-                continue  # codes.shape would be (0,) and unpack would raise
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cds = np.array(list(pdf["pq_codes"]), dtype=np.int64)
-            n, mm = cds.shape
-            for qi, q in enumerate(q_ids):
-                # gather per-block distances by code, sum across blocks
-                ad = tabs[qi][np.arange(mm)[None, :], cds].sum(axis=1)
-                keep = (ids != q) if excl else slice(None)
-                b_ids, b_ad = ids[keep], ad[keep]
-                # (adist, vec_id) lexicographic keeps ties exact
-                sel = np.lexsort((b_ids, b_ad))[:topn]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(len(sel), q, dtype=np.int64),
-                        "vec_id": b_ids[sel],
-                        "adist": b_ad[sel],
-                    }
-                )
+                continue  # codes.shape would be (0,)
+            yield from _adc_top_s(
+                pdf["vec_id"].to_numpy(dtype=np.int64),
+                np.array(list(pdf["pq_codes"]), dtype=np.int64),
+                tabs_,
+                ((q, slice(None), i) for i, q in enumerate(q_ids)),
+                topn,
+                excl_,
+            )
 
-    return codes.mapInPandas(adc, "query_id long, vec_id long, adist double")
+    return codes.mapInPandas(adc, _ADC_SCHEMA)
 
 
 def pq_topk(
@@ -1590,15 +1079,13 @@ def pq_topk(
     Scale shape: the ADC pass reads only the code column (16 bytes a
     vector instead of 256) with a broadcast (m × ksub) table per
     query — a narrow map over the compressed corpus that emits only
-    its task-local top-S per query, so the per-query ranking window
-    sees #tasks·S rows, never the corpus; the exact pass touches
-    shortlist·k rows per query. Recall vs brute force is
-    gate-checked through ann_recall_check and asserted tighter in
-    tests/test_similarity.py."""
+    its task-local top-S per query (:func:`_adc_top_s`), so the
+    per-query ranking window sees #tasks·S rows, never the corpus; the
+    exact pass touches shortlist·k rows per query. Recall vs brute
+    force is gate-checked through ann_recall_check and asserted
+    tighter in tests/test_similarity.py."""
     import numpy as np
-    import pandas as pd
 
-    spark = emb.sparkSession
     books = pq_codebooks(emb, m, ksub)
     qrows = (
         emb.filter(F.col("vec_id").isin(query_ids))
@@ -1607,36 +1094,17 @@ def pq_topk(
     )
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     qmat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qx = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    dtabs = _pq_dtabs(books, qx)
-    n_short = shortlist * k
-    scored = _adc_scan(pq_encode(emb, books), qids, dtabs, n_short)
-    wa = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    cands = (
-        scored.withColumn("ark", F.row_number().over(wa))
-        .filter(F.col("ark") <= shortlist * k)
-        .select("query_id", "vec_id")
+    top_s = shortlist * k
+    scored = _adc_flat_scan(
+        pq_encode(emb, books), qids, _pq_dtabs(books, _unit_rows(qmat)), top_s
     )
-    qv = (
-        # only the query vectors can ever match the candidate join —
-        # broadcast len(query_ids) rows, not the corpus
-        emb.filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    )
-    reranked = (
-        cands.join(F.broadcast(qv), "query_id")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        reranked.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
+    cands = _shortlist(scored, top_s)
+    qv = _query_rows(emb, query_ids)
+    return _cosine_top_k(
+        cands.join(F.broadcast(qv), "query_id").join(
+            emb.select("vec_id", "embedding"), "vec_id"
+        ),
+        k,
     )
 
 
@@ -1652,361 +1120,6 @@ SEMDEDUP_ROWS_PER_CLUSTER = 100
 #: itself gets sharded (hierarchical coarse quantizer), which is a
 #: layout change, not a semantics change.
 SEMDEDUP_MAX_K = 65_536
-
-
-def write_pq_index(
-    emb: DataFrame, path: str, m: int = PQ_M, ksub: int = PQ_KSUB, codebooks=None
-) -> None:
-    """Persist the PQ serving tier: train codebooks once, encode the
-    corpus once, store BOTH — the compressed twin of
-    :func:`write_ivf_index`:
-
-    - ``{path}/codebooks`` — (block, code, centroid), m·ksub tiny rows;
-    - ``{path}/codes`` — (vec_id, pq_codes): 16 bytes a vector at the
-      default geometry, the only thing the ADC scan ever reads. The
-      build lands as hive partition ``append_id=0``; daily batches
-      fold in as higher ids via :func:`append_pq_index`.
-
-    ``codebooks``: optional pretrained (m, ksub, dim//m) array —
-    skips training (rebuild-equality tests; externally versioned
-    codebooks).
-
-    At 100 TB the raw vectors stay in cold storage; queries scan the
-    16x-smaller code table and fetch real vectors only for the
-    shortlist re-rank."""
-    spark = emb.sparkSession
-    books = pq_codebooks(emb, m, ksub) if codebooks is None else codebooks
-    rows = [
-        (b, j, [float(x) for x in books[b][j]])
-        for b in range(books.shape[0])
-        for j in range(books.shape[1])
-    ]
-    spark.createDataFrame(
-        rows, "block int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    # tombstones live inside codes/ — the static overwrite below
-    # truncates them with it
-    # STATIC overwrite pinned (see write_ivf_index): a rebuild must
-    # truncate prior append_id partitions, even under a session-level
-    # dynamic default
-    pq_encode(emb, books).withColumn("append_id", F.lit(0)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("append_id").parquet(
-        f"{path}/codes"
-    )
-
-
-def _stored_codebooks(spark, path: str):
-    """Reconstruct the (m, ksub, dim//m) codebook array from a
-    persisted index's ``codebooks`` table."""
-    import numpy as np
-
-    crows = spark.read.parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["block"] for r in crows)
-    ksub = 1 + max(r["code"] for r in crows)
-    sub = len(crows[0]["centroid"])
-    books = np.zeros((m, ksub, sub))
-    for r in crows:
-        books[r["block"], r["code"]] = r["centroid"]
-    return books
-
-
-def append_pq_index(batch: DataFrame, path: str, append_id: int) -> None:
-    """Daily append for the persisted PQ index: encode a NEW batch
-    with the index's STORED codebooks (never retrained — stored codes
-    and every cached distance table stay valid) and land it as the
-    batch's own ``append_id`` partition of the code table. One narrow
-    encode map + a batch-sized write; the corpus codes are never
-    re-read or rewritten. Same replay contract as
-    :func:`append_ivf_index`: encoding is deterministic, so a re-run
-    with the same ``append_id`` (> 0; the base build owns 0)
-    dynamically overwrites its own partition with identical bytes,
-    while re-appending under a DIFFERENT id is caller error.
-    Codebook drift as the corpus grows degrades recall only; retrain
-    on a maintenance cadence via a fresh :func:`write_pq_index`."""
-    if append_id <= 0:
-        raise ValueError(
-            f"append_id must be > 0 (got {append_id}); 0 is the base build"
-        )
-    spark = batch.sparkSession
-    books = _stored_codebooks(spark, path)
-    (
-        pq_encode(batch, books)
-        .withColumn("append_id", F.lit(append_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("append_id")
-        .parquet(f"{path}/codes")
-    )
-
-
-def pq_topk_indexed(
-    spark,
-    path: str,
-    queries: list[tuple[int, list[float]]],
-    emb: DataFrame | None = None,
-    k: int = 3,
-    shortlist: int = PQ_SHORTLIST,
-    exclude_query_ids: bool = True,
-    vector_store: str | None = None,
-) -> DataFrame:
-    """Query a persisted PQ index with EXTERNAL query vectors: rebuild
-    the distance tables from the stored codebooks (driver-side, tiny),
-    ADC-scan the stored CODE table (never the vectors), then
-    exact-cosine re-rank the shortlist — the only touch of real
-    vectors, shortlist·k rows per query. The re-rank source is either
-    ``emb`` (the live corpus frame — a corpus-shaped raw-vector scan)
-    or ``vector_store`` (a partitioned store from
-    :func:`write_vector_store` — directory-pruned, shortlist-sized;
-    the 100 TB form), bit-identical either way. Same scoring, pruning,
-    and tie-breaks as the live :func:`pq_topk`, so a corpus-member
-    query returns bit-identical neighbors (tests/test_similarity.py).
-    As with :func:`ivf_topk_indexed`, pass ``exclude_query_ids=False``
-    when query ids are an external namespace that may collide with
-    corpus ``vec_id``s."""
-    import numpy as np
-
-    books = _stored_codebooks(spark, path)
-    qids = np.array([q for q, _ in queries], dtype=np.int64)
-    qmat = np.array([v for _, v in queries], dtype=np.float64)
-    qx = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    dtabs = _pq_dtabs(books, qx)
-    scored = _adc_scan(
-        _filter_tombstones(
-            spark, path, spark.read.parquet(f"{path}/codes"), sub="codes"
-        ),
-        qids,
-        dtabs,
-        shortlist * k,
-        exclude_query_ids=exclude_query_ids,
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    cands = (
-        scored.withColumn("ark", F.row_number().over(wa))
-        .filter(F.col("ark") <= shortlist * k)
-        .select("query_id", "vec_id")
-    )
-    return _exact_rerank(
-        spark, cands, queries, k, emb=emb, vector_store=vector_store
-    )
-
-
-#: Query-chunk size inside one pq_topk_bulk block task: distance
-#: tables are built per chunk ((chunk, m, ksub) float64 ≈ 2 KB/query
-#: at the default geometry) so a block task's table memory is bounded
-#: regardless of batch size. Chunking is value-invariant — each
-#: query's table row is independent.
-PQ_BULK_QUERY_CHUNK = 4_096
-
-#: Max queries one pq_topk_bulk task holds (round-10 review): a
-#: cogroup task materializes its whole query group THROUGH ARROW as
-#: one pandas frame, so without a bound every code-block task would
-#: hold the ENTIRE batch — the exact #queries-shaped cost the bulk
-#: shape exists to remove. Batches above this split into
-#: ceil(nq / this) hash blocks of queries and the cogroup runs the
-#: (code-block × query-block) GRID: per-task memory is bounded at
-#: ~this × dim doubles (~8 MB at 64-dim), and the extra corpus
-#: replication (codes × #query-blocks) is proportional to the batch
-#: — amortized by the same O(corpus × queries) ADC compute it feeds.
-#:
-#: The VALUE is measured, round 11 (BASELINE.md pq-grid table,
-#: 200k-code index, 32-thread local JVM with an 8 GB direct-memory
-#: cap): the round-10 bound of 65,536 (~34 MB query groups) was
-#: BORDERLINE — a 131,072-query serve CRASHED with an Arrow netty
-#: OutOfMemory when it followed another serve in the same JVM (warm
-#: allocator arenas; fresh-JVM it passed), and an UNBOUNDED single
-#: block crashed even fresh — and it was also SLOWER: 16,384-query
-#: blocks serve 65k at 3.91 ms/query vs 6.32–7.07 and 131k at
-#: 3.80 ms/query vs 5.66 (1.5–1.8×; finer grid cells load-balance
-#: 32 cores better and allocator pressure drops), with the ×4–×8
-#: codes replication invisible under the ADC compute. Back-to-back
-#: serves at 16,384 ran clean (0 allocation failures). Grid
-#: membership never changes values (pinned bit-equal under forced
-#: splits in tests); override per call via ``max_queries_per_task``.
-PQ_BULK_MAX_QUERIES_PER_TASK = 16_384
-
-
-def pq_topk_bulk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    emb: DataFrame | None = None,
-    k: int = 3,
-    shortlist: int = PQ_SHORTLIST,
-    exclude_query_ids: bool = True,
-    vector_store: str | None = None,
-    n_blocks: int | None = None,
-    max_queries_per_task: int | None = None,
-    prune_max_ids: int | None = None,
-) -> DataFrame:
-    """BULK serve of the persisted flat-PQ index: ``queries`` is a
-    DataFrame ``(query_id, embedding)`` — the THROUGHPUT shape next
-    to :func:`pq_topk_indexed`'s driver-list latency shape, same
-    algorithm, BIT-IDENTICAL results (pinned in
-    tests/test_similarity.py against a looped latency serve, both
-    re-rank sources and the exclude flag).
-
-    Flat PQ has no quantizer to prune by — every query must meet
-    every code row (the round-6 measurement: the ADC scan is
-    corpus-shaped by construction; that is what the IVF-PQ hybrid
-    exists to remove). The bulk decomposition makes that product
-    DISTRIBUTED instead of per-query: the code table is hashed into
-    ``n_blocks`` blocks (default: the session's shuffle parallelism),
-    the query batch into ``ceil(nq / PQ_BULK_MAX_QUERIES_PER_TASK)``
-    hash blocks, each side replicated across the OTHER's blocks
-    (``explode(sequence)``), and a COGROUP pairs every (code-block,
-    query-block) grid cell — per-task memory is bounded at one code
-    block plus one query block no matter the batch size (small
-    batches get one query block and replicate nothing). Each task
-    then runs exactly the latency path's
-    ADC kernel — :func:`_pq_dtabs` tables built executor-side per
-    query CHUNK, the same gather/sum/lexsort, task-local top-S — so
-    per-code-page work amortizes over the whole batch (each code
-    block is read ONCE for all queries, vs once per query driver
-    broadcast in a latency loop). The global (adist, vec_id) window
-    and the shared :func:`_bulk_exact_tail` re-rank finish it;
-    ``n_blocks`` affects partitioning only, never values, because the
-    shortlist order is total.
-
-    WHEN TO PICK WHICH SHAPE (measured, BASELINE.md round-10
-    flat-tier table): at latency-sized batches (≈2k queries) the
-    driver-list :func:`pq_topk_indexed` is ~1.6× FASTER — its
-    distance-table broadcast is megabytes and the cogroup's one
-    corpus shuffle doesn't amortize; the bulk shape exists for
-    batches where the broadcast and the per-batch python loop scale
-    with #queries and stop fitting. Both are bit-identical, so the
-    choice is free.
-
-    Same DETERMINISTIC-``queries`` contract as
-    :func:`ivfpq_topk_bulk` (the serve and the query-block count are
-    separate passes over the query frame; the count is computed ONCE
-    and threaded into the re-rank routing — round 11, verdict
-    What's-wrong #1).
-
-    ``max_queries_per_task`` / ``prune_max_ids`` override
-    :data:`PQ_BULK_MAX_QUERIES_PER_TASK` /
-    :data:`BULK_RERANK_PRUNE_MAX_IDS` per call (probes and tests
-    force grid splits and routing explicitly instead of mutating
-    module globals, which concurrent serves in one process would
-    race on)."""
-    if (emb is None) == (vector_store is None):
-        raise ValueError("pass exactly one of emb / vector_store")
-    books = _stored_codebooks(spark, path)
-    codes = _filter_tombstones(
-        spark, path, spark.read.parquet(f"{path}/codes"), sub="codes"
-    ).select("vec_id", "pq_codes")
-    if n_blocks is not None and int(n_blocks) < 1:
-        raise ValueError(f"n_blocks must be >= 1, got {n_blocks}")
-    if n_blocks:
-        nb = int(n_blocks)
-    else:
-        try:
-            # "auto" under some AQE configurations — fall back to the
-            # cluster's default parallelism rather than failing
-            nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except ValueError:
-            nb = int(spark.sparkContext.defaultParallelism)
-        nb = max(1, nb)
-    # query-block GRID (round-10 review): one cogroup task holds its
-    # whole query group, so huge batches split into nqb hash blocks
-    # and every (code-block, query-block) cell gets its own task —
-    # per-task memory is PQ_BULK_MAX_QUERIES_PER_TASK-bounded. Codes
-    # then replicate nqb× (proportional to the batch, amortized by
-    # the ADC compute); nqb == 1 replicates nothing. Grid membership
-    # is by hash, so values are unchanged — every (code, query) pair
-    # meets in exactly one cell and the shortlist order is total.
-    qpt = (
-        PQ_BULK_MAX_QUERIES_PER_TASK
-        if max_queries_per_task is None
-        else int(max_queries_per_task)
-    )
-    if qpt < 1:
-        raise ValueError(f"max_queries_per_task must be >= 1, got {qpt}")
-    nq = queries.count()
-    nqb = max(1, -(-nq // qpt))
-    top_s = shortlist * k
-    bc = spark.sparkContext.broadcast(
-        (books, top_s, bool(exclude_query_ids))
-    )
-    codes_b = codes.withColumn(
-        "_cb", F.pmod(F.hash(F.col("vec_id")), F.lit(nb))
-    ).withColumn(
-        "_qb", F.explode(F.sequence(F.lit(0), F.lit(nqb - 1)))
-    )
-    qrep = (
-        queries.select("query_id", "embedding")
-        .withColumn("_qb", F.pmod(F.hash(F.col("query_id")), F.lit(nqb)))
-        .withColumn("_cb", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
-    )
-
-    def adc_block(cpdf, qpdf):
-        import numpy as np
-        import pandas as pd
-
-        books_, topn, excl = bc.value
-        empty = pd.DataFrame(
-            {
-                "query_id": np.array([], dtype=np.int64),
-                "vec_id": np.array([], dtype=np.int64),
-                "adist": np.array([], dtype=np.float64),
-            }
-        )
-        if not len(cpdf) or not len(qpdf):
-            return empty
-        ids = cpdf["vec_id"].to_numpy(dtype=np.int64)
-        cds = np.array(list(cpdf["pq_codes"]), dtype=np.int64)
-        _, mm = cds.shape
-        blocks = np.arange(mm)[None, :]
-        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        # owned 2-D buffer + the 2-D norm reduction — the latency
-        # path's exact normalization expression (round-9 BLAS note)
-        qmat = np.array(list(qpdf["embedding"]), dtype=np.float64)
-        qx = qmat / np.maximum(
-            np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12
-        )
-        out = []
-        for s in range(0, len(qids), PQ_BULK_QUERY_CHUNK):
-            chunk = slice(s, s + PQ_BULK_QUERY_CHUNK)
-            tabs = _pq_dtabs(books_, qx[chunk])
-            for qi, q in enumerate(qids[chunk]):
-                # the latency _adc_scan inner body, verbatim values
-                ad = tabs[qi][blocks, cds].sum(axis=1)
-                keep = (ids != q) if excl else slice(None)
-                b_ids, b_ad = ids[keep], ad[keep]
-                sel = np.lexsort((b_ids, b_ad))[:topn]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), q, dtype=np.int64),
-                            "vec_id": b_ids[sel],
-                            "adist": b_ad[sel],
-                        }
-                    )
-                )
-        return pd.concat(out, ignore_index=True) if out else empty
-
-    scored = (
-        codes_b.groupBy("_cb", "_qb")
-        .cogroup(qrep.groupBy("_cb", "_qb"))
-        .applyInPandas(adc_block, "query_id long, vec_id long, adist double")
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    shortlisted = (
-        scored.withColumn("ark", F.row_number().over(wa))
-        .filter(F.col("ark") <= top_s)
-        .select("query_id", "vec_id")
-    )
-    return _bulk_exact_tail(
-        spark,
-        queries,
-        shortlisted,
-        top_s,
-        k,
-        emb,
-        vector_store,
-        n_queries=nq,
-        prune_max_ids=prune_max_ids,
-    )
 
 
 # --------------------------------------------------------------------
@@ -2151,9 +1264,9 @@ def write_vector_store(
     ``(vec_id, embedding, gen)`` under ``{path}/rows/bucket=…`` with
     the bucket count stamped in ``{path}/meta``, gen 0 = the base
     build. Pass ``path`` as ``vector_store=`` to
-    :func:`pq_topk_indexed` / :func:`ivfpq_topk_indexed` and the
-    exact re-rank becomes a directory-pruned point lookup instead of
-    a full raw-vector scan."""
+    :func:`ann_topk_indexed` / :func:`ann_topk_bulk` for a PQ-coded
+    index and the exact re-rank becomes a directory-pruned point
+    lookup instead of a full raw-vector scan."""
     spark = emb.sparkSession
     from ..sources.lakehouse import _hfs
 
@@ -2389,6 +1502,24 @@ def _store_all_vectors(spark, path: str) -> DataFrame:
 BULK_RERANK_PRUNE_MAX_IDS = 2_048
 
 
+def _collected_store_source(spark, shortlisted: DataFrame, path: str):
+    """Collect a shortlist that is bounded by CONSTRUCTION (its
+    row_number filter caps it at #queries·top_s two-long rows) and
+    return it as a local frame together with its ids' latest-live
+    vectors, read from only their bucket directories
+    (:func:`_store_vectors`). The collect materializes the ADC pipeline
+    exactly once and replaces the lazy plan. A direct collect, not
+    :func:`_bounded_collect`: the guard's count-first would execute the
+    whole upstream ADC scan a second time — measured 2-3× on the serve
+    wall-clock."""
+    rows = shortlisted.collect()
+    local = spark.createDataFrame(
+        [(int(r.query_id), int(r.vec_id)) for r in rows],
+        "query_id long, vec_id long",
+    )
+    return local, _store_vectors(spark, path, sorted({int(r.vec_id) for r in rows}))
+
+
 def _bulk_rerank_source(
     spark,
     queries: DataFrame,
@@ -2399,15 +1530,12 @@ def _bulk_rerank_source(
     prune_max_ids: int | None = None,
 ):
     """Route a bulk serve's store re-rank by batch size: returns the
-    (shortlisted, vecs) pair for :func:`_exact_rerank_tail`.
+    (shortlisted, vecs) pair for the re-rank join.
 
-    SMALL batches (#queries × top_s ≤ cutoff): the shortlist is
-    bounded by CONSTRUCTION (its row_number filter caps it at that
-    product), so collect it once — this also materializes the ADC
-    pipeline exactly once, replacing the lazy plan — rebuild it as a
-    local frame, and read only its ids' bucket directories
-    (:func:`_store_vectors`, the latency path's pruned read). LARGE
-    batches: keep the lazy plan and resolve the whole store once
+    SMALL batches (#queries × top_s ≤ cutoff): collect the shortlist
+    and read only its ids' bucket directories
+    (:func:`_collected_store_source`, the latency path's pruned read).
+    LARGE batches: keep the lazy plan and resolve the whole store once
     (:func:`_store_all_vectors`). Bit-identical either way — both
     reads resolve the same latest-live vectors (pinned in
     tests/test_similarity.py under a forced cutoff of 0).
@@ -2424,13 +1552,19 @@ def _bulk_rerank_source(
     nq = queries.count() if n_queries is None else n_queries
     if nq * top_s > cutoff:
         return shortlisted, _store_all_vectors(spark, path)
-    rows = shortlisted.collect()
-    local = spark.createDataFrame(
-        [(int(r.query_id), int(r.vec_id)) for r in rows],
-        "query_id long, vec_id long",
+    return _collected_store_source(spark, shortlisted, path)
+
+
+def _query_vectors(spark, queries: list[tuple[int, list[float]]], elem_t):
+    """Driver-list queries as a broadcast ``(query_id, qv)`` frame,
+    cast to the corpus element type so scoring arithmetic is
+    bit-identical with the live path (float→double→float is exact)."""
+    return F.broadcast(
+        spark.createDataFrame(
+            [(int(q), [float(x) for x in v]) for q, v in queries],
+            "query_id long, qv array<double>",
+        ).select("query_id", F.col("qv").cast(elem_t).alias("qv"))
     )
-    vecs = _store_vectors(spark, path, sorted({int(r.vec_id) for r in rows}))
-    return local, vecs
 
 
 def _exact_rerank(
@@ -2442,174 +1576,392 @@ def _exact_rerank(
     vector_store: str | None = None,
 ) -> DataFrame:
     """Exact-cosine re-rank of a per-query shortlist ``(query_id,
-    vec_id)`` — the tail shared by the PQ-family serves. With ``emb``
+    vec_id)`` — the latency tail of the PQ-coded serves. With ``emb``
     the raw-vector join streams the whole corpus frame (correct, but
     the one corpus-shaped phase left in an indexed serve); with
-    ``vector_store`` the shortlist is collected (bounded by
-    construction at #queries·shortlist·k two-long rows) and the store
-    read touches only its ids' bucket directories. Bit-identical
-    results either way — same
-    vectors, same element-type cast, same rounding, same tie-breaks
-    (pinned in tests/test_similarity.py)."""
-    if (emb is None) == (vector_store is None):
-        raise ValueError("pass exactly one of emb / vector_store")
+    ``vector_store`` the shortlist is collected and the store read
+    touches only its ids' bucket directories. Bit-identical results
+    either way — same vectors, same element-type cast, same rounding,
+    same tie-breaks (:func:`_cosine_top_k`; pinned in
+    tests/test_similarity.py)."""
     if vector_store is not None:
-        # direct collect, not _bounded_collect: the shortlist frame is
-        # bounded by CONSTRUCTION (its row_number filter caps it at
-        # #queries·shortlist·k rows of two longs), and the guard's
-        # count-first would execute the whole upstream ADC scan a
-        # second time — measured 2-3× on the serve wall-clock
-        rows = shortlisted.collect()
-        shortlisted = spark.createDataFrame(
-            [(int(r.query_id), int(r.vec_id)) for r in rows],
-            "query_id long, vec_id long",
-        )
-        vecs = _store_vectors(
-            spark, vector_store, sorted({int(r.vec_id) for r in rows})
+        shortlisted, vecs = _collected_store_source(
+            spark, shortlisted, vector_store
         )
     else:
         vecs = emb.select("vec_id", "embedding")
-    # cast queries to the corpus element type so scoring arithmetic
-    # is bit-identical with the live path (float→double→float exact)
-    elem_t = vecs.schema["embedding"].dataType
-    qv = F.broadcast(
-        spark.createDataFrame(
-            [(int(q), [float(x) for x in v]) for q, v in queries],
-            "query_id long, qv array<double>",
-        ).select("query_id", F.col("qv").cast(elem_t).alias("qv"))
-    )
-    return _exact_rerank_tail(shortlisted, qv, vecs, k)
+    qv = _query_vectors(spark, queries, vecs.schema["embedding"].dataType)
+    return _cosine_top_k(shortlisted.join(qv, "query_id").join(vecs, "vec_id"), k)
 
 
-def _exact_rerank_tail(
-    shortlisted: DataFrame, qv: DataFrame, vecs: DataFrame, k: int
+def _bulk_exact_tail(
+    spark,
+    queries: DataFrame,
+    shortlisted: DataFrame,
+    top_s: int,
+    k: int,
+    emb: DataFrame | None,
+    vector_store: str | None,
+    n_queries: int | None = None,
+    prune_max_ids: int | None = None,
 ) -> DataFrame:
-    """The scoring half every exact re-rank shares — latency
-    (driver-list queries, broadcast qv) and bulk (frame queries) —
-    so rounding, tie-breaks, and output schema can never drift
-    between the two serve shapes."""
-    reranked = (
-        shortlisted.join(qv, "query_id")
-        .join(vecs, "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias(
-                "cosine"
-            ),
+    """Bulk twin of :func:`_exact_rerank`: resolve the re-rank vector
+    source (live frame, or the store routed by batch size via
+    :func:`_bulk_rerank_source` — ``n_queries`` / ``prune_max_ids``
+    thread through), cast the query frame to the corpus element type,
+    and rank through the same :func:`_cosine_top_k`, so rounding,
+    tie-breaks and output schema can never drift between the serve
+    shapes."""
+    if emb is not None:
+        vecs = emb.select("vec_id", "embedding")
+    else:
+        shortlisted, vecs = _bulk_rerank_source(
+            spark,
+            queries,
+            shortlisted,
+            top_s,
+            vector_store,
+            n_queries=n_queries,
+            prune_max_ids=prune_max_ids,
         )
+    elem_t = vecs.schema["embedding"].dataType
+    qv = queries.select(
+        "query_id",
+        F.col("embedding").cast("array<double>").cast(elem_t).alias("qv"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        reranked.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _cosine_top_k(shortlisted.join(qv, "query_id").join(vecs, "vec_id"), k)
 
 
 # --------------------------------------------------------------------
-# IVF-PQ hybrid (round 7): PQ codes stored INSIDE the coarse
-# quantizer's centroid-partitioned lists — the FAISS IVFADC layout
-# (Jégou et al. 2011, public). The round-6 100× probe showed flat
-# PQ's one structural limit: its ADC scan reads the WHOLE code table
-# (corpus-shaped, 4.98 s at 100× — inherent to flat PQ). The hybrid
-# removes it: a probe partition-prunes to nprobe centroid
-# directories, ADC-scans only those lists' 16-byte codes, then
-# exact-re-ranks the shortlist — serve cost tracks nprobe/k of the
-# code table, not the corpus.
+# The persisted ANN index core: ONE life cycle (write, append, change
+# fold, tombstone, compaction, crash recovery) and ONE serve path
+# (probe, ADC or exact scan, re-rank) for the three index families.
+# An index carries its own kind — read back from the artifacts under
+# ``path``, so no caller past the build ever names it:
 #
-# ENCODING CHOICE: the DEFAULT codes are FLAT PQ of the
-# unit-normalized vectors, NOT the residual (x − centroid) encoding
-# classic IVFADC uses. Residual codes buy ADC accuracy; the exact
-# re-rank of the shortlist buys it back here, and flat codes make the
-# hybrid BIT-COMPATIBLE with the flat index — probing ALL lists is
-# provably identical to pq_topk_indexed on the same codebooks
-# (pinned in tests/test_similarity.py), which is the equality that
-# keeps the hybrid testable without a second oracle. Round 8 adds
-# ``residual=True`` as the opt-in accuracy mode (Jégou 2011 §III):
-# codes are PQ of r = x̂ − ĉ(x), the serve-side distance tables are
-# per-(query, probed list) over q̂ − ĉ, and the mode is recorded in
-# ``{path}/meta`` so append/serve stay self-consistent. Residual mode
-# is pinned against flat mode by an all-probe/full-shortlist equality
-# (both reduce to the exact re-rank) plus an ADC-fidelity assertion
-# on a clustered fixture (tests/test_similarity.py).
+# - ``ivf``: ``centroids/`` (the coarse quantizer) + ``lists/`` — raw
+#   vectors hive-partitioned by ``(centroid_id, append_id)``. A probe
+#   partition-prunes to its nprobe lists and scores their stored
+#   vectors exactly; no shortlist, no re-rank.
+# - ``pq``: ``codebooks/`` + ``codes/`` — ``(vec_id, pq_codes)``, 16
+#   bytes a vector, partitioned by ``append_id`` alone. Flat PQ has no
+#   quantizer to prune by: every query ADC-scans the whole code table
+#   (corpus-shaped by construction — the round-6 measurement), then
+#   exact-re-ranks its shortlist.
+# - ``ivfpq`` / ``ivfpq_residual``: all of the above composed — PQ
+#   codes stored INSIDE the coarse quantizer's centroid-partitioned
+#   lists, the FAISS IVFADC layout (Jégou et al. 2011, public), plus a
+#   ``meta/`` row recording the encoding. A probe prunes to nprobe
+#   lists, ADC-scans only their codes, exact-re-ranks the shortlist —
+#   serve cost tracks nprobe/k of the code table, not the corpus.
+#
+# ENCODING CHOICE for the hybrid: ``ivfpq`` codes are FLAT PQ of the
+# unit-normalized vectors, not the residual (x − centroid) classic
+# IVFADC uses. Residual codes buy ADC accuracy; the exact re-rank of
+# the shortlist buys it back here, and flat codes make the hybrid
+# BIT-COMPATIBLE with the flat index — probing ALL lists is provably
+# identical to the ``pq`` serve on the same codebooks (pinned in
+# tests/test_similarity.py), the equality that keeps the hybrid
+# testable without a second oracle. ``ivfpq_residual`` (round 8) is
+# the opt-in accuracy mode (Jégou 2011 §III): codes are PQ of
+# r = x̂ − ĉ(x), served with per-(query, probed list) distance tables
+# over q̂ − ĉ; the mode is recorded in ``meta`` so append and serve
+# stay self-consistent (an absent ``meta`` — hybrids written before it
+# existed — means flat).
+#
+# Serve strategies stay the ones the index's shape selects: flat PQ
+# runs the every-code × every-query product (broadcast tables in the
+# latency shape, a cogroup grid in bulk); IVF and IVF-PQ join the
+# probed lists. Latency (driver-list queries) and bulk (a query
+# DataFrame) remain two entry points — their crossovers are measured
+# (BASELINE.md round 10) and bit-equality between them is pinned.
 # --------------------------------------------------------------------
 
+#: The persisted index kinds :func:`write_ann_index` builds.
+ANN_KINDS = ("ivf", "pq", "ivfpq", "ivfpq_residual")
+#: The artifact directories each kind owns. A write removes every
+#: OTHER kind's artifacts under its path — a stale ``codebooks/`` left
+#: when an IVF-PQ path is rebuilt as IVF would otherwise make the path
+#: read back as IVF-PQ.
+_KIND_ARTIFACTS = {
+    "ivf": ("centroids", "lists"),
+    "pq": ("codebooks", "codes"),
+    "ivfpq": ("centroids", "codebooks", "meta", "lists"),
+    "ivfpq_residual": ("centroids", "codebooks", "meta", "lists"),
+}
+_TOMBSTONES = "_tombstones"
 
-def write_ivfpq_index(
+
+def _data_dir(kind: str) -> str:
+    """The generation-partitioned table of ``kind`` — ``codes`` for
+    flat PQ, ``lists`` for the centroid-partitioned kinds — and the
+    home of its ``_tombstones``."""
+    return "codes" if kind == "pq" else "lists"
+
+
+def _index_kind(spark, path: str) -> str:
+    """Read a persisted index's kind from the artifacts that already
+    exist: ``centroids/`` means a coarse quantizer, ``codebooks/``
+    means PQ codes, both mean the hybrid (residual per its ``meta``).
+    Neither raises — the path holds no index."""
+    from ..sources.lakehouse import _hfs
+
+    root = path.rstrip("/")
+    fs, jvm = _hfs(spark, root)
+    P = jvm.org.apache.hadoop.fs.Path
+    coarse = fs.exists(P(f"{root}/centroids"))
+    coded = fs.exists(P(f"{root}/codebooks"))
+    if coarse and coded:
+        return "ivfpq_residual" if _stored_ivfpq_residual(spark, root) else "ivfpq"
+    if not (coarse or coded):
+        raise ValueError(
+            f"no ANN index at {path}: neither centroids/ nor codebooks/"
+        )
+    return "ivf" if coarse else "pq"
+
+
+def _stored_centroids(spark, path: str):
+    """Load a persisted index's quantizer as the (ids, matrix) pair
+    the assignment/probe kernels take."""
+    import numpy as np
+
+    crows = sorted(
+        spark.read.parquet(f"{path}/centroids").collect(),
+        key=lambda r: r["centroid_id"],
+    )
+    cids = np.array([r["centroid_id"] for r in crows], dtype=np.int64)
+    cmat = np.array([r["embedding"] for r in crows], dtype=np.float64)
+    return cids, cmat
+
+
+def _stored_codebooks(spark, path: str):
+    """Reconstruct the (m, ksub, dim//m) codebook array from a
+    persisted index's ``codebooks`` table."""
+    import numpy as np
+
+    crows = spark.read.parquet(f"{path}/codebooks").collect()
+    m = 1 + max(r["block"] for r in crows)
+    ksub = 1 + max(r["code"] for r in crows)
+    sub = len(crows[0]["centroid"])
+    books = np.zeros((m, ksub, sub))
+    for r in crows:
+        books[r["block"], r["code"]] = r["centroid"]
+    return books
+
+
+def _stored_ivfpq_residual(spark, path: str) -> bool:
+    """Read a persisted hybrid's encoding mode. Indexes written before
+    the meta artifact existed are flat by construction — absence means
+    False, not an error."""
+    from ..sources.lakehouse import _hfs
+
+    fs, jvm = _hfs(spark, path)
+    mpath = f"{path.rstrip('/')}/meta"
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(mpath)):
+        return False
+    return bool(spark.read.parquet(mpath).collect()[0]["residual"])
+
+
+def _load_index(spark, path: str):
+    """``(kind, centroids, codebooks)`` of a persisted index; the
+    artifacts its kind lacks are None."""
+    kind = _index_kind(spark, path)
+    cq = None if kind == "pq" else _stored_centroids(spark, path)
+    books = None if kind == "ivf" else _stored_codebooks(spark, path)
+    return kind, cq, books
+
+
+def _check_generation(append_id: int) -> None:
+    if append_id <= 0:
+        raise ValueError(
+            f"append_id must be > 0 (got {append_id}); 0 is the base build"
+        )
+
+
+def write_ann_index(
     emb: DataFrame,
     path: str,
+    kind: str,
     n_centroids: int = IVF_K,
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
     refine: bool = True,
-    residual: bool = False,
     centroids=None,
     codebooks=None,
 ) -> None:
-    """Persist the IVF-PQ hybrid serving index — four artifacts:
+    """Persist an ANN serving index of ``kind`` (one of
+    :data:`ANN_KINDS`) — the build-once/query-many production form of
+    the live :func:`ivf_topk` / :func:`pq_topk`. Artifacts, per kind:
 
-    - ``{path}/centroids`` — the coarse quantizer (same layout as
-      :func:`write_ivf_index`);
-    - ``{path}/codebooks`` — the PQ codebooks (same layout as
-      :func:`write_pq_index`);
-    - ``{path}/lists`` — ``(vec_id, pq_codes)`` hive-partitioned by
-      ``(centroid_id, append_id)``: a probe reads only its nprobe
-      top-level directories AND only 16 bytes a vector inside them —
-      the partition pruning of the IVF index composed with the
-      compression of the PQ index;
-    - ``{path}/meta`` — one row recording the encoding mode, so the
-      append/serve paths of an existing index never have to be TOLD
-      how it was built (a mode mismatch would silently score garbage).
+    - ``{path}/centroids`` (``ivf``, ``ivfpq*``) — the tiny coarse
+      quantizer (centroid_id, embedding), one file;
+    - ``{path}/codebooks`` (``pq``, ``ivfpq*``) — (block, code,
+      centroid), m·ksub tiny rows;
+    - ``{path}/meta`` (``ivfpq*``) — one row recording the encoding
+      mode, so append/serve never have to be TOLD how the index was
+      built (a mode mismatch would silently score garbage);
+    - ``{path}/lists`` (``ivf``: raw vectors; ``ivfpq*``: ``(vec_id,
+      pq_codes)``) hive-PARTITIONED by ``(centroid_id, append_id)``: a
+      probe reads only its nprobe top-level directories, never
+      scanning or shuffling the other lists;
+    - ``{path}/codes`` (``pq``) — ``(vec_id, pq_codes)`` partitioned
+      by ``append_id``: 16 bytes a vector at the default geometry, the
+      only thing the ADC scan ever reads.
 
-    Build is ONE corpus pass: the assignment kernel carries the
-    vector to the encode kernel (``pq_encode(carry=...)``), no vec_id
-    join. ``refine`` defaults to the Lloyd-refined coarse quantizer
-    (see :func:`write_ivf_index` — list balance is what the pruning
-    fraction rests on). ``residual=True`` encodes IVFADC residuals
-    (:func:`residual_codebooks`) instead of flat unit vectors — finer
-    codes at identical layout/serve cost. ``centroids`` /
-    ``codebooks``: optional pretrained artifacts (rebuild-equality
-    tests; externally versioned quantizers — with ``residual=True``,
-    ``codebooks`` must be residual-trained)."""
+    The build lands as generation ``append_id=0``; daily batches fold
+    in as higher ids via :func:`append_ann_index` without rewriting
+    the base. Build is ONE corpus pass per kind: the assignment kernel
+    carries the vector through (``ivf``), or assign + encode run as
+    one fused kernel (:func:`_assign_and_encode`, ``ivfpq*``) — no
+    vec_id join. Training happens before anything is written, and the
+    write removes every other kind's artifacts under ``path``.
+
+    ``refine`` DEFAULTS to True (round 8): the production build trains
+    the Lloyd-refined quantizer (:func:`kmeans_centroids`, bounded
+    driver-side sample). First-k centroids on real Zipfian embeddings
+    give unbalanced inverted lists, which degrades both the probe's
+    pruned fraction and recall at fixed nprobe — the two numbers the
+    partition-pruned serving story rests on (BASELINE.md round-8
+    quantizer table). ``refine=False`` keeps the deterministic first-k
+    quantizer the SQL oracle mirrors. ``ivfpq_residual`` trains its
+    codebooks on coarse residuals (:func:`residual_codebooks`) —
+    finer codes at identical layout and serve cost.
+
+    ``centroids`` / ``codebooks``: optional pretrained (ids, matrix)
+    quantizer and (m, ksub, dim//m) codebooks — they override
+    training (rebuild-equality tests; externally versioned
+    quantizers — for ``ivfpq_residual`` the codebooks must be
+    residual-trained). Parameters a kind has no artifact for are
+    ignored. At 100 TB the raw vectors of the PQ kinds stay in cold
+    storage (or a :func:`write_vector_store`); queries scan the
+    16×-smaller codes and fetch real vectors only for the shortlist."""
+    from ..sources.lakehouse import _hfs
+
+    if kind not in ANN_KINDS:
+        raise ValueError(f"kind must be one of {ANN_KINDS}, got {kind!r}")
     spark = emb.sparkSession
-    if centroids is not None:
-        cids, cmat = centroids
+    root = path.rstrip("/")
+    cq = books = None
+    if kind != "pq":
+        if centroids is not None:
+            cq = centroids
+        elif refine:
+            cq = kmeans_centroids(emb, n_centroids)
+        else:
+            cq = _centroids(emb, n_centroids)
+    if kind != "ivf":
+        if codebooks is not None:
+            books = codebooks
+        elif kind == "ivfpq_residual":
+            books = residual_codebooks(emb, cq, m, ksub)
+        else:
+            books = pq_codebooks(emb, m, ksub)
+    fs, jvm = _hfs(spark, root)
+    P = jvm.org.apache.hadoop.fs.Path
+    owned = set(_KIND_ARTIFACTS[kind])
+    for name in sorted(set().union(*_KIND_ARTIFACTS.values()) - owned):
+        if fs.exists(P(f"{root}/{name}")):
+            _fs_must(fs.delete(P(f"{root}/{name}"), True), f"delete {name}")
+    if cq is not None:
+        cids, cmat = cq
+        spark.createDataFrame(
+            [(int(c), [float(x) for x in cmat[i]]) for i, c in enumerate(cids)],
+            "centroid_id long, embedding array<double>",
+        ).coalesce(1).write.mode("overwrite").parquet(f"{root}/centroids")
+    if books is not None:
+        rows = [
+            (b, j, [float(x) for x in books[b][j]])
+            for b in range(books.shape[0])
+            for j in range(books.shape[1])
+        ]
+        spark.createDataFrame(
+            rows, "block int, code int, centroid array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{root}/codebooks")
+    if kind in ("ivfpq", "ivfpq_residual"):
+        spark.createDataFrame(
+            [(kind == "ivfpq_residual",)], "residual boolean"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{root}/meta")
+    _write_generation(emb, root, kind, cq, books, 0)
+
+
+def append_ann_index(batch: DataFrame, path: str, append_id: int) -> None:
+    """The serving tier's daily loop (the index twin of
+    ``dedup.append_signature_catalog``): assign and/or encode a NEW
+    embedding batch with the index's STORED quantizer and codebooks —
+    never retrained, so existing lists, codes, cached distance tables
+    and every past probe stay valid — and land it as the batch's own
+    ``append_id`` partitions. A hybrid's stored ``meta`` decides flat
+    vs residual encoding, so the batch is encoded exactly the way the
+    base build was. Cost is one narrow map over the batch plus a
+    batch-sized write; the base is never re-read or rewritten, and
+    probes keep partition-pruning on ``centroid_id`` as before.
+
+    ``append_id`` identifies the batch (> 0; the base build owns 0)
+    and makes replay IDEMPOTENT by layout: assignment and encoding are
+    deterministic, so a crashed-and-re-run append dynamically
+    overwrites exactly its own partitions with identical content — the
+    staged-delta discipline of ``streaming/materialize.py``. Appending
+    the same batch under TWO DIFFERENT ids is caller error (vectors
+    would duplicate); queries do not dedup. Query equality with a
+    same-quantizer one-shot rebuild and replay idempotence are pinned
+    in tests/test_similarity.py. Quantizer or codebook drift as the
+    corpus grows degrades recall, not correctness — rebuild on a
+    maintenance cadence with a fresh :func:`write_ann_index`."""
+    _check_generation(append_id)
+    kind, cq, books = _load_index(batch.sparkSession, path)
+    _write_generation(batch, path.rstrip("/"), kind, cq, books, append_id)
+
+
+def _write_generation(
+    batch: DataFrame, root: str, kind: str, cq, books, append_id: int
+) -> None:
+    """Assign/encode ``batch`` with the index's artifacts and land it
+    as generation ``append_id`` of the kind's data table. The base
+    build (0) is a STATIC overwrite, pinned explicitly: a rebuild must
+    truncate the whole table, embedded ``_tombstones`` included — under
+    a session-level dynamic default, stale ``append_id>0`` partitions
+    of the previous layout would survive next to the fresh quantizer's
+    and silently duplicate. An append is a DYNAMIC overwrite of exactly
+    its own partitions."""
+    if kind == "ivf":
+        rows = ivf_assignments(batch, centroids=cq, with_embedding=True)
+    elif kind == "pq":
+        rows = pq_encode(batch, books)
     else:
-        cids, cmat = (
-            kmeans_centroids(emb, n_centroids)
-            if refine
-            else _centroids(emb, n_centroids)
-        )
-    cdf = spark.createDataFrame(
-        [(int(c), [float(x) for x in cmat[i]]) for i, c in enumerate(cids)],
-        "centroid_id long, embedding array<double>",
-    )
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    if codebooks is None:
-        books = (
-            residual_codebooks(emb, (cids, cmat), m, ksub)
-            if residual
-            else pq_codebooks(emb, m, ksub)
-        )
-    else:
-        books = codebooks
-    rows = [
-        (b, j, [float(x) for x in books[b][j]])
-        for b in range(books.shape[0])
-        for j in range(books.shape[1])
-    ]
-    spark.createDataFrame(
-        rows, "block int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    spark.createDataFrame(
-        [(bool(residual),)], "residual boolean"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    coded = _assign_and_encode(emb, (cids, cmat), books, residual)
-    # STATIC overwrite pinned (see write_ivf_index): a rebuild must
-    # truncate prior append_id partitions and embedded _tombstones
+        rows = _assign_and_encode(batch, cq, books, kind == "ivfpq_residual")
     _write_list_partitions(
-        coded.withColumn("append_id", F.lit(0)), f"{path}/lists", static=True
+        rows.withColumn("append_id", F.lit(append_id)),
+        f"{root}/{_data_dir(kind)}",
+        static=append_id == 0,
+    )
+
+
+def _write_list_partitions(df: DataFrame, dest: str, static: bool = False):
+    """Write an index generation frame as the serving layout. A
+    ``(…, centroid_id, append_id)`` frame is hive-partitioned AND first
+    repartitioned by ``centroid_id``, so each list directory receives
+    files from ONE task — one file per (list, write), not one per
+    (list, shuffle task). This is load-bearing, measured in round 8:
+    without the repartition, a K=512 build from 32 tasks left 16k+
+    files under ``lists/`` and the probe's FILE LISTING cost (3.6–14
+    s) dwarfed everything the partition pruning saved; with it the
+    tree holds one file per non-empty list. One extra shuffle of the
+    compact payload (16-byte codes / raw vectors) paid at BUILD time —
+    the build-once/serve-many trade this index exists for. A
+    pathological hot list still lands in one task/file; at sizes where
+    one list outgrows a task, the centroid count is undersized for the
+    corpus (the K ∝ √N rule) — fix K, not the writer. The flat PQ code
+    table (no ``centroid_id``) partitions by ``append_id`` alone and
+    keeps input-coalesced tasks: one directory, file count already
+    small."""
+    parts = ("append_id",)
+    if "centroid_id" in df.columns:
+        df, parts = df.repartition(F.col("centroid_id")), ("centroid_id", "append_id")
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static" if static else "dynamic")
+        .partitionBy(*parts)
+        .parquet(dest)
     )
 
 
@@ -2648,11 +2000,8 @@ def _assign_and_encode(
                 blk = pdf.iloc[lo : lo + block_rows]
                 ids = blk["vec_id"].to_numpy(dtype=np.int64)
                 mat = np.array(list(blk["embedding"]), dtype=np.float64)
-                cos = _cosines_fast(mat, cmat)
-                pick = _argmax_lowest_id(cos, cids)
-                x = mat / np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-                )
+                pick = _argmax_lowest_id(_cosines_fast(mat, cmat), cids)
+                x = _unit_rows(mat)
                 if res:
                     scids, scmat = lk
                     x = x - scmat[np.searchsorted(scids, pick)]
@@ -2676,47 +2025,128 @@ def _assign_and_encode(
     )
 
 
-def _stored_ivfpq_residual(spark, path: str) -> bool:
-    """Read a persisted hybrid's encoding mode. Indexes written before
-    the meta artifact existed are flat by construction — absence means
-    False, not an error."""
+def tombstone_index(spark, path: str, vec_ids, append_id: int) -> None:
+    """Mark corpus vectors DEAD for every index generation before
+    ``append_id`` — the delete/update half of the persisted ANN
+    serving loop (every kind shares the ``append_id`` partition
+    convention, so one tombstone layout serves all).
+
+    A tombstone row lands under ``{path}/{lists|codes}/_tombstones/
+    append_id=N`` (the kind's data table; the underscore prefix hides
+    it from the parquet scans of the enclosing dir) and kills matching
+    ``vec_id`` rows with ``append_id < N`` at probe time. Living
+    INSIDE the data dir is load-bearing: a rebuild's static overwrite
+    and a compaction's rename-swap replace data and tombstones in ONE
+    atomic directory operation, so no crash ordering can pair fresh
+    rows with stale tombstones. GENERATION SCOPING is the point: the
+    same batch's own re-insert (an update's post-image appended under
+    the same id) and any later re-insert survive their own tombstone,
+    so delete + re-add compose without ever rewriting the base. Replay
+    is idempotent by the same layout rule as the appends — a re-run
+    dynamically overwrites exactly its own partition with identical
+    content. The set is churn-sized (bounded by deletes + updates,
+    never corpus size), which is why the probe-side filter may
+    broadcast it; a rebuild clears it along with the data."""
+    _check_generation(append_id)
+    sub = _data_dir(_index_kind(spark, path))
+    if not isinstance(vec_ids, DataFrame):
+        vec_ids = spark.createDataFrame(
+            [(int(v),) for v in vec_ids], "vec_id long"
+        )
+    (
+        vec_ids.select("vec_id")
+        .distinct()
+        .withColumn("append_id", F.lit(append_id))
+        .repartition(1)  # churn-sized by contract: one file per batch
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("append_id")
+        .parquet(f"{path.rstrip('/')}/{sub}/{_TOMBSTONES}")
+    )
+
+
+def _read_probed_lists(spark, path: str, probe_cids) -> DataFrame:
+    """Read ONLY the probed ``centroid_id=…`` directories of
+    ``lists/``, as explicit paths under ``basePath`` — partition
+    pruning applied at FILE DISCOVERY time, not after it. Round-8
+    measurement: reading the whole tree and filtering
+    (`read.parquet(lists).filter(isin)`) costs ~2 s at K=512 before a
+    single row moves — 512 partition dirs exceed
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32),
+    so Spark launches a distributed LISTING JOB over directories the
+    filter then throws away; the flat PQ table's one-dir scan of 19×
+    more rows took 0.2 s. Listing only the nprobe-union directories
+    keeps discovery driver-side and proportional to the probe, which
+    is the entire point of the layout. The redundant ``isin`` filter
+    stays upstream so the scan still carries an explicit
+    PartitionFilter (plan-asserted in tests) and stray files under a
+    foreign directory can never leak in. Probed ids whose list is
+    EMPTY (the refined quantizer leaves some) have no directory — they
+    are skipped by the existence check; if none exist, falls back to
+    the full-tree read (correct, just unpruned, and only reachable
+    when every probed list is empty)."""
+    from ..sources.lakehouse import _hfs
+
+    base = f"{path.rstrip('/')}/lists"
+    fs, jvm = _hfs(spark, base)
+    P = jvm.org.apache.hadoop.fs.Path
+    dirs = [
+        d
+        for c in probe_cids
+        if fs.exists(P(d := f"{base}/centroid_id={c}"))
+    ]
+    # a wide probe union (big query batch × nprobe) can exceed the
+    # default discovery threshold (32) on its own — keep even that
+    # listing driver-side (raise-only, lock-guarded; same contract as
+    # the store read)
+    _raise_discovery_threshold(spark, len(dirs) + 1)
+    reader = spark.read.option("basePath", base)
+    rows = reader.parquet(*dirs) if dirs else spark.read.parquet(base)
+    return rows.filter(F.col("centroid_id").isin(list(probe_cids)))
+
+
+def _filter_tombstones(
+    spark, path: str, rows: DataFrame, sub: str
+) -> DataFrame:
+    """Probe-side tombstone filter: drop index rows whose ``vec_id``
+    is dead as of a generation AFTER the row's own ``append_id``.
+    No-op when the index has none. One broadcast left join against
+    the churn-sized max-generation set — the pruned lists/codes scan
+    is never shuffled."""
     from ..sources.lakehouse import _hfs
 
     fs, jvm = _hfs(spark, path)
-    mpath = f"{path.rstrip('/')}/meta"
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(mpath)):
-        return False
-    return bool(spark.read.parquet(mpath).collect()[0]["residual"])
-
-
-def append_ivfpq_index(batch: DataFrame, path: str, append_id: int) -> None:
-    """Daily append for the hybrid: assign against the STORED coarse
-    quantizer, encode with the STORED codebooks (neither retrained —
-    every existing list, code, and cached distance table stays valid),
-    land as the batch's own ``(centroid_id, append_id)`` partitions.
-    The stored ``meta`` mode decides flat vs residual encoding — the
-    batch is encoded exactly the way the base build was. Same replay
-    contract as :func:`append_ivf_index`: deterministic, so a re-run
-    with the same id overwrites its own partitions with identical
-    bytes; re-appending under a different id duplicates."""
-    if append_id <= 0:
-        raise ValueError(
-            f"append_id must be > 0 (got {append_id}); 0 is the base build"
+    tpath = f"{path.rstrip('/')}/{sub}/{_TOMBSTONES}"
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(tpath)):
+        return rows
+    dead = (
+        spark.read.parquet(tpath)
+        .groupBy("vec_id")
+        .agg(F.max("append_id").alias("_dead_as_of"))
+    )
+    return (
+        rows.join(F.broadcast(dead), "vec_id", "left")
+        .filter(
+            F.col("_dead_as_of").isNull()
+            | (F.col("append_id") >= F.col("_dead_as_of"))
         )
-    spark = batch.sparkSession
-    cq = _stored_centroids(spark, path)
-    coded = _assign_and_encode(
-        batch,
-        cq,
-        _stored_codebooks(spark, path),
-        _stored_ivfpq_residual(spark, path),
-    )
-    _write_list_partitions(
-        coded.withColumn("append_id", F.lit(append_id)), f"{path}/lists"
+        .drop("_dead_as_of")
     )
 
 
-def apply_changes_to_ivfpq_index(
+def _live_rows(spark, path: str, kind: str, probe_cids=None) -> DataFrame:
+    """An index's serving rows with tombstoned generations dropped:
+    the whole data table, or (``probe_cids``) only the probed list
+    directories of a centroid-partitioned kind."""
+    sub = _data_dir(kind)
+    if probe_cids is None:
+        rows = spark.read.parquet(f"{path.rstrip('/')}/{sub}")
+    else:
+        rows = _read_probed_lists(spark, path, probe_cids)
+    return _filter_tombstones(spark, path, rows, sub)
+
+
+def apply_changes_to_ann_index(
     spark,
     path: str,
     changes: DataFrame,
@@ -2724,100 +2154,231 @@ def apply_changes_to_ivfpq_index(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> None:
-    """Hybrid twin of :func:`apply_changes_to_ivf_index`: deletes +
-    update pre-images tombstone (the lists share the generation-scoped
-    ``_tombstones`` layout), inserts + post-images append through
-    :func:`append_ivfpq_index`. Churn-sized, replay-idempotent."""
+    """Fold a lakehouse change feed (``sources.lakehouse.read_changes``
+    vocabulary) into a persisted index as ONE replay-idempotent batch:
+    deletes + update pre-images tombstone the stored copies
+    (:func:`tombstone_index`), inserts + update post-images append
+    under the same ``append_id`` (:func:`append_ann_index`, encoded by
+    the stored artifacts). After the fold a probe sees exactly the
+    post-snapshot corpus — pinned in tests/test_similarity.py against
+    a same-quantizer rebuild from the post-change table. Cost is
+    churn-sized on both legs (one narrow map + two batch-sized
+    writes); the base is never re-read or rewritten — the index twin
+    of the feed's own contract that incremental work reads the churn,
+    not the table. The feed is localCheckpoint-ed first: its plan is a
+    snapshot join, and the two probes + two writes below would
+    otherwise re-run it four times."""
     changes = changes.localCheckpoint()
-    dead, live = _split_changes(changes, id_col, emb_col)
+    dead = changes.filter(F.col("_change_type").isin(*CDF_DEAD_TYPES)).select(
+        F.col(id_col).alias("vec_id")
+    )
+    live = changes.filter(F.col("_change_type").isin(*CDF_LIVE_TYPES)).select(
+        F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")
+    )
     if dead.take(1):
-        tombstone_index(spark, path, dead, append_id, sub="lists")
+        tombstone_index(spark, path, dead, append_id)
     if live.take(1):
-        append_ivfpq_index(live, path, append_id)
+        append_ann_index(live, path, append_id)
 
 
-def compact_ivfpq_index(spark, path: str) -> None:
-    """Generation merge for the hybrid's lists — identical contract to
-    :func:`compact_ivf_index` (the layout is the same
-    ``(centroid_id, append_id)`` tree; only the payload differs)."""
-    _compact_index_dir(spark, path, "lists", ("centroid_id",))
+def compact_ann_index(spark, path: str) -> None:
+    """Maintenance rewrite for a persisted index that has accumulated
+    change-feed folds: fold every ``append_id`` generation back into
+    the base (``append_id=0``), physically removing tombstoned rows —
+    after which probes drop the broadcast tombstone join, and the
+    partition-directory count collapses back to one per centroid (a
+    year of daily folds otherwise leaves 365 ``append_id`` dirs under
+    every touched centroid). Centroid-partitioned tables re-cluster to
+    one file per list (compaction is exactly the moment to reclaim
+    file-count amplification); no assignment or encode is recomputed.
+
+    Atomicity: tombstones live INSIDE the data dir (``_tombstones``,
+    hidden from parquet scans), so the rename swap replaces data and
+    tombstones in one directory operation — no interleaving of crash
+    and probe can pair the merged gen-0 rows with stale tombstones.
+    A crash in the rename gap leaves the index momentarily unreadable
+    (never wrong), and :func:`recover_index_compaction` finishes or
+    discards the rewrite; every residue state is pinned in
+    tests/test_similarity.py. Single maintainer assumed (probes are
+    read-only and safe throughout; concurrent compactions are the
+    caller's corruption, same as lakehouse writers without the lease).
+
+    Like every line-truncating rewrite here (catalog rebuilds,
+    ``compact_term_stats``), compaction closes the REPLAY window:
+    re-running a pre-compaction fold afterwards would re-append its
+    batch as duplicates. Cost: one scan + write of the LIVE rows."""
+    from ..sources.lakehouse import _hfs
+
+    root = path.rstrip("/")
+    kind = _index_kind(spark, root)
+    sub = _data_dir(kind)
+    recover_index_compaction(spark, root)
+    fs, jvm = _hfs(spark, root)
+    P = jvm.org.apache.hadoop.fs.Path
+    # the .compact dir carries merged gen-0 rows and NO _tombstones —
+    # the swap below retires both the old rows and the old tombstones
+    # in one rename
+    _write_list_partitions(
+        _live_rows(spark, root, kind).withColumn("append_id", F.lit(0)),
+        f"{root}/{sub}.compact",
+        static=True,
+    )
+    if not fs.rename(P(f"{root}/{sub}"), P(f"{root}/{sub}.old")):
+        raise IOError(f"compact: rename {sub} -> {sub}.old failed")
+    if not fs.rename(P(f"{root}/{sub}.compact"), P(f"{root}/{sub}")):
+        raise IOError(f"compact: rename {sub}.compact -> {sub} failed")
+    fs.delete(P(f"{root}/{sub}.old"), True)
 
 
-def _adc_scan_probed(
-    cands: DataFrame,
-    qids,
-    dtabs,
-    top_s: int,
-    exclude_query_ids: bool = True,
-    list_tabs=None,
-) -> DataFrame:
+def recover_index_compaction(spark, path: str) -> str:
+    """Resolve any crash residue of :func:`compact_ann_index` —
+    idempotent, also runs as the compactor's own pre-clean. Returns
+    what it did."""
+    from ..sources.lakehouse import _hfs
+
+    root = path.rstrip("/")
+    sub = _data_dir(_index_kind(spark, root))
+    fs, jvm = _hfs(spark, root)
+    P = jvm.org.apache.hadoop.fs.Path
+    live, old, cmp_ = (
+        fs.exists(P(f"{root}/{sub}")),
+        fs.exists(P(f"{root}/{sub}.old")),
+        fs.exists(P(f"{root}/{sub}.compact")),
+    )
+    if live and not old:
+        if cmp_:  # crashed mid/post write, before any rename
+            fs.delete(P(f"{root}/{sub}.compact"), True)
+            return "discarded partial rewrite"
+        return "clean"
+    if not live and old and cmp_:  # crashed between the two renames
+        if not fs.rename(P(f"{root}/{sub}.compact"), P(f"{root}/{sub}")):
+            raise IOError(f"recover: rename {sub}.compact -> {sub} failed")
+        fs.delete(P(f"{root}/{sub}.old"), True)
+        return "finished swap"
+    if live and old:  # crashed before cleanup
+        fs.delete(P(f"{root}/{sub}.old"), True)
+        return "finished cleanup"
+    raise RuntimeError(
+        f"unrecoverable index state at {root}/{sub}: "
+        f"live={live} old={old} compact={cmp_}"
+    )
+
+
+def _check_rerank_source(kind: str, emb, vector_store) -> None:
+    if kind == "ivf":
+        if emb is not None or vector_store is not None:
+            raise ValueError(
+                "an IVF index scores its own stored vectors — pass "
+                "neither emb nor vector_store"
+            )
+    elif (emb is None) == (vector_store is None):
+        raise ValueError("pass exactly one of emb / vector_store")
+
+
+def _adc_probed_scan(
+    cands: DataFrame, books, lookup, top_s: int, excl: bool, queries=None
+):
     """ADC scan of a PROBED candidate frame ``(query_id, vec_id,
-    pq_codes)`` — each row is scored only for the query whose probe
-    selected it (per-query IVF semantics; :func:`_adc_scan` scores
-    every row for every query, the flat-PQ shape). Emits each task's
-    local top-``top_s`` per query, so the downstream ranking window
-    sees #tasks·S rows.
+    pq_codes, centroid_id[, qemb])`` — each row is scored only for the
+    query whose probe selected it (per-query IVF semantics), emitting
+    each task's local top-``top_s`` per query.
 
-    ``list_tabs``: residual mode — a dict ``{(query_id, centroid_id):
-    (m, ksub) table}`` over ``q̂ − ĉ`` (the candidate frame then also
-    carries ``centroid_id``); a code's distance is looked up in ITS
-    list's table, then the per-query batch-local top-``top_s`` is
-    taken across lists exactly as in flat mode."""
-    import numpy as np
-    import pandas as pd
+    Per batch, one stable argsort on query_id makes every query's rows
+    a CONTIGUOUS run (round 10: the round-9 form re-scanned the whole
+    batch with an O(rows) boolean mask per query). Any within-run
+    permutation yields identical output — selection is by the total
+    (adist, vec_id) order. Distance tables are built for the batch's
+    queries (flat codes) or for its DISTINCT (query, probed list)
+    pairs over q̂ − ĉ (``lookup`` given: residual codes, ≤ #queries ×
+    nprobe tables); :func:`_pq_dtabs` rows are per-query independent,
+    so task-local tables equal driver-built ones bit-for-bit.
 
+    Query vectors come from ``queries`` — a ``(sorted query ids,
+    unit-normalized matrix)`` pair broadcast by the latency serve — or,
+    when None, from the ``qemb`` column the bulk probe frame carries,
+    normalized here."""
     spark = cands.sparkSession
     bc = spark.sparkContext.broadcast(
-        (qids, dtabs, top_s, exclude_query_ids, list_tabs)
+        (books, lookup, top_s, bool(excl), queries)
     )
 
     def adc(batches):
-        q_ids, tabs, topn, excl, ltabs = bc.value
-        q_index = {int(q): i for i, q in enumerate(q_ids)}
+        import numpy as np
+
+        books_, lkp, topn, excl_, known = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             qcol = pdf["query_id"].to_numpy(dtype=np.int64)
             cds = np.array(list(pdf["pq_codes"]), dtype=np.int64)
-            _, mm = cds.shape
-            blocks = np.arange(mm)[None, :]
-            ccol = (
-                pdf["centroid_id"].to_numpy(dtype=np.int64)
-                if ltabs is not None
-                else None
-            )
-            for q in np.unique(qcol):
-                rows_q = qcol == q
-                b_ids = ids[rows_q]
-                if ltabs is None:
-                    ad = tabs[q_index[int(q)]][blocks, cds[rows_q]].sum(axis=1)
-                else:
-                    sub_cds = cds[rows_q]
-                    sub_cc = ccol[rows_q]
-                    ad = np.empty(len(b_ids), dtype=np.float64)
-                    for c in np.unique(sub_cc):
-                        in_c = sub_cc == c
-                        ad[in_c] = ltabs[(int(q), int(c))][
-                            blocks, sub_cds[in_c]
-                        ].sum(axis=1)
-                if excl:
-                    keep = b_ids != q
-                    b_ids, ad = b_ids[keep], ad[keep]
-                # (adist, vec_id) lexicographic keeps ties exact
-                sel = np.lexsort((b_ids, ad))[:topn]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(len(sel), q, dtype=np.int64),
-                        "vec_id": b_ids[sel],
-                        "adist": ad[sel],
-                    }
+            order = np.argsort(qcol, kind="stable")
+            sq = qcol[order]
+            starts = np.flatnonzero(np.r_[True, sq[1:] != sq[:-1]])
+            ends = np.r_[starts[1:], len(sq)]
+            run = np.repeat(np.arange(len(starts)), ends - starts)
+            if known is None:
+                # BIT-STABILITY (round-9 probe finding): normalize via
+                # the 2-D reduction form on an OWNED buffer — the exact
+                # expression the latency path applies to its query
+                # matrix. A 1-D ``np.linalg.norm(qvec)`` routes through
+                # BLAS ddot, whose kernel dispatch varies with the Arrow
+                # buffer's memory layout: the same bit-identical vector
+                # measured a 1-ULP-different norm between a fresh and a
+                # cache-materialized candidates frame, and on a
+                # PQ-degenerate corpus (thousands of exact ADC ties)
+                # that one ULP flips shortlist membership. add.reduce's
+                # pairwise order is fixed by the row length,
+                # layout-independent, so the batched (g, dim) form is
+                # bit-equal per row to the (1, dim) form.
+                qx = _unit_rows(
+                    np.array(
+                        [pdf["qemb"].iat[int(i)] for i in order[starts]],
+                        dtype=np.float64,
+                        ndmin=2,
+                    )
                 )
+            else:
+                qx = known[1][np.searchsorted(known[0], sq[starts])]
+            if lkp is None:
+                tabs, tix = _pq_dtabs(books_, qx), run
+            else:
+                scids, scmat = lkp
+                sccol = pdf["centroid_id"].to_numpy(dtype=np.int64)[order]
+                cpos = np.minimum(np.searchsorted(scids, sccol), len(scids) - 1)
+                if not np.array_equal(scids[cpos], sccol):
+                    # same loud out-of-sync contract as pq_encode's
+                    # kernel: an unclamped miss would make cpos ==
+                    # len(scids) and the pair encoding below silently
+                    # decode into the NEXT run's query row, scoring
+                    # garbage distances (round-11 ADVICE)
+                    raise ValueError(
+                        "centroid_id(s) in the batch are not in the "
+                        "provided quantizer — assignments and "
+                        "quantizer are out of sync"
+                    )
+                upair, tix = np.unique(
+                    run * len(scids) + cpos, return_inverse=True
+                )
+                tabs = _pq_dtabs(
+                    books_, qx[upair // len(scids)] - scmat[upair % len(scids)]
+                )
+            yield from _adc_top_s(
+                ids[order],
+                cds[order],
+                tabs,
+                (
+                    (int(sq[lo]), slice(lo, hi), tix[lo:hi])
+                    for lo, hi in zip(starts, ends)
+                ),
+                topn,
+                excl_,
+            )
 
-    return cands.mapInPandas(adc, "query_id long, vec_id long, adist double")
+    return cands.mapInPandas(adc, _ADC_SCHEMA)
 
 
-def ivfpq_topk_indexed(
+def ann_topk_indexed(
     spark,
     path: str,
     queries: list[tuple[int, list[float]]],
@@ -2828,128 +2389,257 @@ def ivfpq_topk_indexed(
     exclude_query_ids: bool = True,
     vector_store: str | None = None,
 ) -> DataFrame:
-    """Query the persisted IVF-PQ hybrid: probe selection on the
-    driver against the broadcast-size quantizer, a PARTITION-PRUNED
-    scan of only the probed centroid directories' 16-byte codes, ADC
-    shortlisting per query within its own probed lists
-    (:func:`_adc_scan_probed`), then exact-cosine re-rank — the only
-    touch of real vectors, shortlist·k rows per query, against
-    ``emb`` (the live corpus frame) or the directory-pruned
-    ``vector_store`` (:func:`write_vector_store`; with it EVERY phase
-    of the serve is corpus-size-independent — probed lists by
-    partition pruning, raw vectors by bucket pruning).
-    Same scoring and tie-breaks as the flat
-    :func:`pq_topk_indexed`; with ``nprobe = n_centroids`` the result
-    is BIT-IDENTICAL to it (every list probed ⇒ the whole code table
-    scanned — pinned in tests/test_similarity.py), which is the
-    equality that makes the hybrid's pruning auditably lossless
-    except for the nprobe recall knob IVF already gates.
+    """Query a persisted index (:func:`write_ann_index`) with
+    EXTERNAL query vectors — the LATENCY serve shape: queries arrive
+    as a driver-side list, probe selection and distance tables are
+    computed on the driver against the tiny stored artifacts and
+    broadcast. The path's kind picks the strategy:
 
-    A RESIDUAL-mode index (``write_ivfpq_index(residual=True)``,
-    detected from the stored ``meta``) is served with per-(query,
-    probed-list) distance tables over ``q̂ − ĉ`` — same pruning, same
-    tie-breaks, finer ADC ordering; table count is #queries·nprobe,
-    each m×ksub, still broadcast-trivial."""
+    - ``ivf``: probe the ``nprobe`` nearest lists per query
+      (:func:`_select_probes`), scan ONLY their directories
+      (partition-pruned), exact cosine on the stored vectors. Same
+      scoring and tie-break as the live :func:`ivf_topk`, so a corpus
+      member's own vector returns bit-identical neighbors.
+    - ``pq``: ADC-scan the whole stored CODE table (never the
+      vectors) against per-query distance tables rebuilt from the
+      stored codebooks — bit-identical to the live :func:`pq_topk`.
+    - ``ivfpq`` / ``ivfpq_residual``: probe like IVF, ADC-shortlist
+      per query within its own probed lists (:func:`_adc_probed_scan`
+      — residual codes get per-(query, probed list) tables over
+      q̂ − ĉ). With ``nprobe = n_centroids`` a flat hybrid is
+      BIT-IDENTICAL to the ``pq`` serve on the same codebooks (every
+      list probed ⇒ the whole code table scanned), which makes the
+      hybrid's pruning auditably lossless except for the nprobe
+      recall knob IVF already gates.
+
+    The PQ kinds then exact-cosine re-rank their ``shortlist``·k
+    per-query shortlist — the only touch of real vectors — against
+    ``emb`` (the live corpus frame — a corpus-shaped raw-vector scan)
+    or ``vector_store`` (a :func:`write_vector_store` path —
+    directory-pruned, shortlist-sized; with it EVERY phase of the
+    hybrid serve is corpus-size-independent), bit-identical either
+    way; pass exactly one. An IVF index re-ranks nothing: passing
+    either raises. ``nprobe`` is ignored by flat PQ, ``shortlist`` by
+    IVF. All pinned in tests/test_similarity.py.
+
+    External queries live in their OWN id namespace: pass
+    ``exclude_query_ids=False`` so a query id that happens to collide
+    with a corpus ``vec_id`` does not silently drop that corpus vector
+    from its results (True matches the live corpus-member
+    semantics)."""
     import numpy as np
 
-    cids, cmat = _stored_centroids(spark, path)
-    books = _stored_codebooks(spark, path)
-    residual = _stored_ivfpq_residual(spark, path)
+    kind, cq, books = _load_index(spark, path)
+    _check_rerank_source(kind, emb, vector_store)
     qids = np.array([q for q, _ in queries], dtype=np.int64)
     qmat = np.array([v for _, v in queries], dtype=np.float64)
-    qcos = _seq_cosines(qmat, cmat)
-    probes = [
-        (int(q), int(c))
-        for qi, q in enumerate(qids)
-        for c in cids[np.argsort(-qcos[qi], kind="stable")[:nprobe]]
-    ]
-    probe_df = spark.createDataFrame(probes, "query_id long, centroid_id long")
-    probe_cids = sorted({c for _, c in probes})
-    lists = _filter_tombstones(
-        spark,
-        path,
-        _read_probed_lists(spark, path, probe_cids),
-        sub="lists",
-    )
-    qx = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    if residual:
-        scids, scmat = _normalized_centroid_lookup((cids, cmat))
-        pos = {int(q): i for i, q in enumerate(qids)}
-        shifted = np.stack(
-            [
-                qx[pos[q]] - scmat[np.searchsorted(scids, c)]
-                for q, c in probes
-            ]
+    top_s = shortlist * k
+    excl = bool(exclude_query_ids)
+    if kind == "pq":
+        scored = _adc_flat_scan(
+            _live_rows(spark, path, kind),
+            qids,
+            _pq_dtabs(books, _unit_rows(qmat)),
+            top_s,
+            excl,
         )
-        per_pair = _pq_dtabs(books, shifted)
-        list_tabs = {probes[i]: per_pair[i] for i in range(len(probes))}
-        dtabs = None
-        cand_cols = ("query_id", "vec_id", "pq_codes", "centroid_id")
     else:
-        list_tabs = None
-        dtabs = _pq_dtabs(books, qx)
-        cand_cols = ("query_id", "vec_id", "pq_codes")
-    cands = lists.join(F.broadcast(probe_df), "centroid_id").select(*cand_cols)
-    scored = _adc_scan_probed(
-        cands,
-        qids,
-        dtabs,
-        shortlist * k,
-        exclude_query_ids=exclude_query_ids,
-        list_tabs=list_tabs,
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    shortlisted = (
-        scored.withColumn("ark", F.row_number().over(wa))
-        .filter(F.col("ark") <= shortlist * k)
-        .select("query_id", "vec_id")
-    )
+        probes = [
+            (int(q), int(c))
+            for q, row in zip(qids, _select_probes(qmat, *cq, nprobe))
+            for c in row
+        ]
+        probe_df = spark.createDataFrame(probes, "query_id long, centroid_id long")
+        lists = _live_rows(spark, path, kind, sorted({c for _, c in probes}))
+        cands = lists.join(F.broadcast(probe_df), "centroid_id")
+        if kind == "ivf":
+            if excl:
+                cands = cands.filter(F.col("vec_id") != F.col("query_id"))
+            # schema from the already-discovered pruned frame — a
+            # fresh read.parquet here would re-list the whole tree
+            qv = _query_vectors(spark, queries, lists.schema["embedding"].dataType)
+            return _cosine_top_k(cands.join(qv, "query_id"), k)
+        order = np.argsort(qids, kind="stable")
+        scored = _adc_probed_scan(
+            cands.select("query_id", "vec_id", "pq_codes", "centroid_id"),
+            books,
+            _normalized_centroid_lookup(cq) if kind == "ivfpq_residual" else None,
+            top_s,
+            excl,
+            queries=(qids[order], _unit_rows(qmat)[order]),
+        )
     return _exact_rerank(
-        spark, shortlisted, queries, k, emb=emb, vector_store=vector_store
+        spark, _shortlist(scored, top_s), queries, k, emb, vector_store
     )
 
 
-def _bulk_probe_frame(
-    queries: DataFrame, cids, cmat, nprobe: int
-) -> DataFrame:
-    """PROBE phase shared by the bulk serves: one ``mapInPandas``
-    pass over the query frame against the broadcast quantizer — the
-    same :func:`_seq_cosines` kernel and stable-argsort tie rule as
-    the driver paths' probe loops — exploding to ``(query_id,
-    centroid_id, qemb)`` × nprobe. No collect; the carried ``qemb``
-    (widened to double exactly like the driver paths' ``float()``)
-    lets downstream phases score without a second join against the
-    query frame."""
+#: Query-chunk size inside one flat-PQ bulk block task: distance
+#: tables are built per chunk ((chunk, m, ksub) float64 ≈ 2 KB/query
+#: at the default geometry) so a block task's table memory is bounded
+#: regardless of batch size. Chunking is value-invariant — each
+#: query's table row is independent.
+PQ_BULK_QUERY_CHUNK = 4_096
+
+#: Max queries one flat-PQ bulk task holds (round-10 review): a
+#: cogroup task materializes its whole query group THROUGH ARROW as
+#: one pandas frame, so without a bound every code-block task would
+#: hold the ENTIRE batch — the exact #queries-shaped cost the bulk
+#: shape exists to remove. Batches above this split into
+#: ceil(nq / this) hash blocks of queries and the cogroup runs the
+#: (code-block × query-block) GRID: per-task memory is bounded at
+#: ~this × dim doubles (~8 MB at 64-dim), and the extra corpus
+#: replication (codes × #query-blocks) is proportional to the batch
+#: — amortized by the same O(corpus × queries) ADC compute it feeds.
+#:
+#: The VALUE is measured, round 11 (BASELINE.md pq-grid table,
+#: 200k-code index, 32-thread local JVM with an 8 GB direct-memory
+#: cap): the round-10 bound of 65,536 (~34 MB query groups) was
+#: BORDERLINE — a 131,072-query serve CRASHED with an Arrow netty
+#: OutOfMemory when it followed another serve in the same JVM (warm
+#: allocator arenas; fresh-JVM it passed), and an UNBOUNDED single
+#: block crashed even fresh — and it was also SLOWER: 16,384-query
+#: blocks serve 65k at 3.91 ms/query vs 6.32–7.07 and 131k at
+#: 3.80 ms/query vs 5.66 (1.5–1.8×; finer grid cells load-balance
+#: 32 cores better and allocator pressure drops), with the ×4–×8
+#: codes replication invisible under the ADC compute. Back-to-back
+#: serves at 16,384 ran clean (0 allocation failures). Grid
+#: membership never changes values (pinned bit-equal under forced
+#: splits in tests); override per call via ``max_queries_per_task``.
+PQ_BULK_MAX_QUERIES_PER_TASK = 16_384
+
+
+def _pq_bulk_grid(
+    spark,
+    codes: DataFrame,
+    queries: DataFrame,
+    books,
+    top_s: int,
+    excl: bool,
+    n_blocks: int | None,
+    max_queries_per_task: int | None,
+):
+    """Flat PQ's bulk ADC: returns ``(scored, #queries)``. Flat PQ has
+    no quantizer to prune by — every query must meet every code row —
+    so the bulk decomposition makes that product DISTRIBUTED instead
+    of per-query: the code table is hashed into ``n_blocks`` blocks
+    (default: the session's shuffle parallelism), the query batch into
+    ``ceil(nq / PQ_BULK_MAX_QUERIES_PER_TASK)`` hash blocks, each side
+    replicated across the OTHER's blocks (``explode(sequence)``), and
+    a COGROUP pairs every (code-block, query-block) grid cell —
+    per-task memory is bounded at one code block plus one query block
+    no matter the batch size (small batches get one query block and
+    replicate nothing). Each task runs the same ADC kernel as the
+    latency serve, with :func:`_pq_dtabs` tables built executor-side
+    per query CHUNK, so each code block is read ONCE for all queries
+    (vs once per query broadcast in a latency loop). ``n_blocks`` and
+    grid membership affect partitioning only, never values, because
+    every (code, query) pair meets in exactly one cell and the
+    shortlist order is total."""
+    if n_blocks is not None and int(n_blocks) < 1:
+        raise ValueError(f"n_blocks must be >= 1, got {n_blocks}")
+    if n_blocks:
+        nb = int(n_blocks)
+    else:
+        try:
+            # "auto" under some AQE configurations — fall back to the
+            # cluster's default parallelism rather than failing
+            nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except ValueError:
+            nb = int(spark.sparkContext.defaultParallelism)
+        nb = max(1, nb)
+    qpt = (
+        PQ_BULK_MAX_QUERIES_PER_TASK
+        if max_queries_per_task is None
+        else int(max_queries_per_task)
+    )
+    if qpt < 1:
+        raise ValueError(f"max_queries_per_task must be >= 1, got {qpt}")
+    nq = queries.count()
+    nqb = max(1, -(-nq // qpt))
+    bc = spark.sparkContext.broadcast((books, top_s, bool(excl)))
+    codes_b = codes.select("vec_id", "pq_codes").withColumn(
+        "_cb", F.pmod(F.hash(F.col("vec_id")), F.lit(nb))
+    ).withColumn(
+        "_qb", F.explode(F.sequence(F.lit(0), F.lit(nqb - 1)))
+    )
+    qrep = (
+        queries.select("query_id", "embedding")
+        .withColumn("_qb", F.pmod(F.hash(F.col("query_id")), F.lit(nqb)))
+        .withColumn("_cb", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
+    )
+
+    def adc_block(cpdf, qpdf):
+        import numpy as np
+        import pandas as pd
+
+        books_, topn, excl_ = bc.value
+        empty = pd.DataFrame(
+            {
+                "query_id": np.array([], dtype=np.int64),
+                "vec_id": np.array([], dtype=np.int64),
+                "adist": np.array([], dtype=np.float64),
+            }
+        )
+        if not len(cpdf) or not len(qpdf):
+            return empty
+        ids = cpdf["vec_id"].to_numpy(dtype=np.int64)
+        cds = np.array(list(cpdf["pq_codes"]), dtype=np.int64)
+        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
+        # owned 2-D buffer + the 2-D norm reduction — the latency
+        # path's exact normalization expression (round-9 BLAS note)
+        qx = _unit_rows(np.array(list(qpdf["embedding"]), dtype=np.float64))
+        out = []
+        for s in range(0, len(qids), PQ_BULK_QUERY_CHUNK):
+            chunk = slice(s, s + PQ_BULK_QUERY_CHUNK)
+            out.extend(
+                _adc_top_s(
+                    ids,
+                    cds,
+                    _pq_dtabs(books_, qx[chunk]),
+                    ((q, slice(None), i) for i, q in enumerate(qids[chunk])),
+                    topn,
+                    excl_,
+                )
+            )
+        return pd.concat(out, ignore_index=True) if out else empty
+
+    scored = (
+        codes_b.groupBy("_cb", "_qb")
+        .cogroup(qrep.groupBy("_cb", "_qb"))
+        .applyInPandas(adc_block, _ADC_SCHEMA)
+    )
+    return scored, nq
+
+
+def _bulk_probe_frame(queries: DataFrame, centroids, nprobe: int) -> DataFrame:
+    """PROBE phase of the bulk serves: one ``mapInPandas`` pass over
+    the query frame against the broadcast quantizer — the same
+    :func:`_select_probes` rule as the latency serve — exploding to
+    ``(query_id, centroid_id, qemb)`` × nprobe. No collect; the
+    carried ``qemb`` (widened to double exactly like the latency
+    paths' ``float()``) lets downstream phases score without a second
+    join against the query frame."""
     spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((cids, cmat, int(nprobe)))
+    bc = spark.sparkContext.broadcast((centroids, int(nprobe)))
 
     def probe(batches):
         import numpy as np
         import pandas as pd
 
-        cids_, cmat_, np_ = bc.value
+        (cids, cmat), np_ = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             qmat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            qcos = _seq_cosines(qmat, cmat_)
-            reps = []
-            cols = []
-            for i in range(len(pdf)):
-                sel = np.argsort(-qcos[i], kind="stable")[:np_]
-                reps.append(len(sel))
-                cols.extend(int(c) for c in np.asarray(cids_)[sel])
+            probed = _select_probes(qmat, cids, cmat, np_)
+            reps = probed.shape[1]
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(
                         pdf["query_id"].to_numpy(dtype=np.int64), reps
                     ),
-                    "centroid_id": np.array(cols, dtype=np.int64),
-                    "qemb": [
-                        e
-                        for e, r in zip(pdf["embedding"], reps)
-                        for _ in range(r)
-                    ],
+                    "centroid_id": probed.ravel().astype(np.int64),
+                    "qemb": [e for e in pdf["embedding"] for _ in range(reps)],
                 }
             )
 
@@ -2958,46 +2648,7 @@ def _bulk_probe_frame(
     )
 
 
-def _bulk_exact_tail(
-    spark,
-    queries: DataFrame,
-    shortlisted: DataFrame,
-    top_s: int,
-    k: int,
-    emb: DataFrame | None,
-    vector_store: str | None,
-    n_queries: int | None = None,
-    prune_max_ids: int | None = None,
-) -> DataFrame:
-    """Bulk-serve re-rank tail shared by the PQ-coded families
-    (:func:`pq_topk_bulk`, :func:`ivfpq_topk_bulk`): resolve the
-    re-rank vector source (live frame, or the store routed by batch
-    size via :func:`_bulk_rerank_source` — ``n_queries`` /
-    ``prune_max_ids`` thread through), cast the query frame to
-    the corpus element type, and run the shared
-    :func:`_exact_rerank_tail` — one body so rounding, tie-breaks,
-    and output schema can never drift between the bulk families."""
-    if emb is not None:
-        vecs = emb.select("vec_id", "embedding")
-    else:
-        shortlisted, vecs = _bulk_rerank_source(
-            spark,
-            queries,
-            shortlisted,
-            top_s,
-            vector_store,
-            n_queries=n_queries,
-            prune_max_ids=prune_max_ids,
-        )
-    elem_t = vecs.schema["embedding"].dataType
-    qv = queries.select(
-        "query_id",
-        F.col("embedding").cast("array<double>").cast(elem_t).alias("qv"),
-    )
-    return _exact_rerank_tail(shortlisted, qv, vecs, k)
-
-
-def ivfpq_topk_bulk(
+def ann_topk_bulk(
     spark,
     path: str,
     queries: DataFrame,
@@ -3007,226 +2658,141 @@ def ivfpq_topk_bulk(
     shortlist: int = PQ_SHORTLIST,
     exclude_query_ids: bool = True,
     vector_store: str | None = None,
+    n_blocks: int | None = None,
+    max_queries_per_task: int | None = None,
     prune_max_ids: int | None = None,
 ) -> DataFrame:
-    """BULK serve of the persisted IVF-PQ hybrid: ``queries`` is a
-    DataFrame ``(query_id, embedding)`` instead of a driver-side
-    list — the THROUGHPUT shape (retrieve neighbors for a whole eval
-    set, join a query corpus against an index) next to
-    :func:`ivfpq_topk_indexed`'s latency shape, whose driver-bounded
-    probe selection and broadcast distance tables cannot hold a
-    million-query batch.
+    """BULK serve of a persisted index: ``queries`` is a DataFrame
+    ``(query_id, embedding)`` instead of a driver-side list — the
+    THROUGHPUT shape (retrieve neighbors for a whole eval set, join a
+    query corpus against an index) next to :func:`ann_topk_indexed`'s
+    latency shape, whose driver-side probe selection and broadcast
+    distance tables cannot hold a million-query batch. Same algorithm
+    and parameters, distributed at every phase, BIT-IDENTICAL results
+    (pinned in tests/test_similarity.py against looped latency serves,
+    every kind, both re-rank sources, the exclude flag):
 
-    Same algorithm, distributed at every phase, BIT-IDENTICAL results
-    (pinned in tests/test_similarity.py against a looped latency
-    serve, flat and residual modes, both re-rank sources):
-
-    1. PROBE: one ``mapInPandas`` pass over the query frame against
-       the broadcast quantizer — the same :func:`_seq_cosines` kernel
-       and stable-argsort tie rule as the driver path — exploding to
-       ``(query_id, centroid_id, qemb)`` × nprobe. No collect.
+    1. PROBE (``ivf``, ``ivfpq*``): :func:`_bulk_probe_frame`, no
+       collect.
     2. CANDIDATES: the probed-list read stays PARTITION-PRUNED — the
        distinct probed centroid set is quantizer-bounded (≤ K rows,
-       never query-count-shaped), so collecting it to drive
-       :func:`_read_probed_lists` keeps the bounded-driver
-       discipline; candidates come from an equi-join on
+       never query-count-shaped), so collecting it keeps the
+       bounded-driver discipline; candidates come from an equi-join on
        ``centroid_id`` (co-partitioned shuffle — broadcast would ship
-       the whole query batch to every task).
-    3. ADC: per-batch distance tables computed EXECUTOR-SIDE from the
-       carried ``qemb`` and the broadcast codebooks
-       (:func:`_pq_dtabs` rows are per-query independent, so
-       task-local tables equal the driver path's broadcast tables
-       bit-for-bit); residual mode shifts by the row's own probed
-       centroid exactly like the latency path's per-(query, list)
-       tables. Task-local top-S per query, then the global shortlist
-       window — deterministic under ANY partitioning because the
-       (adist, vec_id) order is total.
-    4. RE-RANK: the shared :func:`_exact_rerank_tail` against ``emb``
-       or the vector store. Store reads route by batch size
-       (:func:`_bulk_rerank_source`, round 10): below the
-       ``BULK_RERANK_PRUNE_MAX_IDS`` bound the shortlist is collected
-       (bounded by construction) and the read is bucket-directory
-       PRUNED like the latency path's; above it the whole rows tree
-       is resolved once, amortized over the batch.
+       the whole query batch to every task). An IVF index scores the
+       exact cosine directly on the joined rows and stops here.
+    3. ADC: ``ivfpq*`` through :func:`_adc_probed_scan` with tables
+       computed executor-side from the carried ``qemb``; flat ``pq``
+       through the block-decomposed cogroup grid of
+       :func:`_pq_bulk_grid` (``n_blocks`` / ``max_queries_per_task``
+       override its code-block count and
+       :data:`PQ_BULK_MAX_QUERIES_PER_TASK` per call; they shape flat
+       PQ's grid only, and passing them for another kind raises).
+       Task-local top-S, then the global (adist, vec_id) shortlist
+       window — deterministic under ANY partitioning.
+    4. RE-RANK: :func:`_bulk_exact_tail` against ``emb`` or the vector
+       store; store reads route by batch size
+       (:func:`_bulk_rerank_source`, ``prune_max_ids`` overriding
+       :data:`BULK_RERANK_PRUNE_MAX_IDS`).
 
-    100 TB shape: every phase is a narrow map, a key-partitioned
-    join, or a per-query window — nothing collects query-count- or
-    corpus-shaped data to the driver. The probed-lists scan is the
+    WHEN TO PICK WHICH SHAPE (measured, BASELINE.md round-10
+    flat-tier table): IVF bulk is at parity with the latency API at 2k
+    queries and 1.2× at 16k — both are the same JVM join, so the bulk
+    win is only the driver-built probe list and broadcast the latency
+    path re-pays per batch. Flat PQ at latency-sized batches (≈2k
+    queries) is ~1.6× FASTER through the latency API — its
+    distance-table broadcast is megabytes and the cogroup's one corpus
+    shuffle doesn't amortize; the bulk shape exists for batches where
+    the broadcast and the per-batch Python loop scale with #queries
+    and stop fitting. Both shapes are bit-identical, so batch size
+    alone picks.
+
+    100 TB shape: every phase is a narrow map, a key-partitioned join,
+    a cogroup, or a per-query window — nothing collects query-count-
+    or corpus-shaped data to the driver. The probed-lists scan is the
     union of the BATCH's probes (approaching all K lists for a large
-    diverse batch — at which point the scan is the throughput
-    optimum: each list page serves many queries).
+    diverse batch — at which point the scan is the throughput optimum:
+    each list page serves many queries).
 
     CONTRACT — ``queries`` must be DETERMINISTIC: the serve plans
     multiple passes over the query frame (the probe distinct-collect
-    that prunes the list read, the serve execution itself, and the
-    re-rank routing count), and Spark recomputes the frame for each.
-    A non-deterministic source (``sample()``, ``limit`` without an
-    ``orderBy``, ``rand()``-derived ids) can probe centroids on the
-    second pass that the first pass's pruned list read never loaded —
-    those candidates silently vanish from results. Materialize such
-    frames first (write to parquet, or ``localCheckpoint()``) —
-    deliberately NOT done here: an unconditional checkpoint would pin
-    a query-batch-sized copy (embeddings included) per serve in a
-    pure-serving session that never crosses a release boundary."""
-    import numpy as np
-
-    if (emb is None) == (vector_store is None):
-        raise ValueError("pass exactly one of emb / vector_store")
-    cids, cmat = _stored_centroids(spark, path)
-    books = _stored_codebooks(spark, path)
-    residual = _stored_ivfpq_residual(spark, path)
-    lookup = _normalized_centroid_lookup((cids, cmat)) if residual else None
-    probes = _bulk_probe_frame(queries, cids, cmat, nprobe)
-    # quantizer-bounded (≤ K rows): keeps the probed-list read pruned.
-    # DELIBERATELY uncached: the probe pass runs twice (this distinct
-    # and again inside the serve execution) — each is one narrow map
-    # over the query frame, while plan_cache here would leak one
-    # query-batch-sized tracked cache PER SERVE in a pure-serving
-    # session (the tracker only releases at a registry query-build
-    # boundary, which a serving loop never crosses — round-9 review).
-    probe_cids = sorted(
-        int(r.centroid_id)
-        for r in probes.select("centroid_id").distinct().collect()
-    )
-    lists = _filter_tombstones(
-        spark, path, _read_probed_lists(spark, path, probe_cids), sub="lists"
-    )
-    cands = lists.join(probes, "centroid_id").select(
-        "query_id", "vec_id", "pq_codes", "qemb", "centroid_id"
-    )
+    that prunes the list read, the flat grid's count, the serve
+    execution itself, and the re-rank routing count — computed once
+    and threaded through when the grid already counted), and Spark
+    recomputes the frame for each. A non-deterministic source
+    (``sample()``, ``limit`` without an ``orderBy``, ``rand()``-derived
+    ids) can probe centroids on the second pass that the first pass's
+    pruned list read never loaded — those candidates silently vanish
+    from results. Materialize such frames first (write to parquet, or
+    ``localCheckpoint()``) — deliberately NOT done here: an
+    unconditional checkpoint would pin a query-batch-sized copy
+    (embeddings included) per serve in a pure-serving session that
+    never crosses a release boundary."""
+    kind, cq, books = _load_index(spark, path)
+    _check_rerank_source(kind, emb, vector_store)
     top_s = shortlist * k
-    bc2 = spark.sparkContext.broadcast(
-        (books, top_s, bool(exclude_query_ids), lookup)
-    )
-
-    def adc_bulk(batches):
-        import numpy as np
-        import pandas as pd
-
-        books_, topn, excl, lkp = bc2.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            qcol = pdf["query_id"].to_numpy(dtype=np.int64)
-            cds = np.array(list(pdf["pq_codes"]), dtype=np.int64)
-            ccol = pdf["centroid_id"].to_numpy(dtype=np.int64)
-            _, mm = cds.shape
-            blocks = np.arange(mm)[None, :]
-            # GROUPING (round-10, verdict What's-wrong #1): one stable
-            # argsort on query_id makes every query's candidate rows a
-            # CONTIGUOUS run — the round-9 form walked the batch with
-            # a per-row Python ``enumerate`` and then re-scanned the
-            # whole batch with an O(rows) boolean mask PER QUERY
-            # (O(rows × queries-per-batch), the dominant bulk-ADC
-            # cost at a 16k-query batch's ~10⁸-row candidate stream).
-            # Any within-group permutation yields identical output:
-            # selection is by the total (adist, vec_id) order, so
-            # only the row SET per query matters, and sorting by
-            # query_id never splits or merges groups. Pinned
-            # bit-equal to the latency loop in tests.
-            order = np.argsort(qcol, kind="stable")
-            sq = qcol[order]
-            starts = np.flatnonzero(np.r_[True, sq[1:] != sq[:-1]])
-            ends = np.r_[starts[1:], len(sq)]
-            firsts = order[starts]
-            # BIT-STABILITY (round-9 probe finding): normalize via
-            # the 2-D reduction form on an OWNED buffer — the exact
-            # expression the latency path applies to its query
-            # matrix. A 1-D ``np.linalg.norm(qvec)`` routes through
-            # BLAS ddot, whose kernel dispatch varies with the Arrow
-            # buffer's memory layout: the same bit-identical vector
-            # measured a 1-ULP-different norm between a fresh and a
-            # cache-materialized candidates frame, and on a
-            # PQ-degenerate corpus (thousands of exact ADC ties) that
-            # one ULP flips shortlist membership. add.reduce's
-            # pairwise order is fixed by the row length,
-            # layout-independent, so the batched (g, dim) form below
-            # is bit-equal per row to the (1, dim) form.
-            q2d = np.array(
-                [pdf["qemb"].iat[int(i)] for i in firsts],
-                dtype=np.float64,
-                ndmin=2,
+    nq = None
+    if kind == "pq":
+        scored, nq = _pq_bulk_grid(
+            spark,
+            _live_rows(spark, path, kind),
+            queries,
+            books,
+            top_s,
+            exclude_query_ids,
+            n_blocks,
+            max_queries_per_task,
+        )
+    else:
+        if n_blocks is not None or max_queries_per_task is not None:
+            raise ValueError(
+                "n_blocks / max_queries_per_task shape the flat-PQ "
+                f"cogroup grid only; {path} is a {kind} index"
             )
-            qx_all = q2d / np.maximum(
-                np.linalg.norm(q2d, axis=1, keepdims=True), 1e-12
+        probes = _bulk_probe_frame(queries, cq, nprobe)
+        # quantizer-bounded (≤ K rows): keeps the probed-list read
+        # pruned. DELIBERATELY uncached: the probe pass runs twice
+        # (this distinct and again inside the serve execution) — each
+        # is one narrow map over the query frame, while plan_cache
+        # here would leak one query-batch-sized tracked cache PER
+        # SERVE in a pure-serving session (the tracker only releases
+        # at a registry query-build boundary, which a serving loop
+        # never crosses — round-9 review).
+        probe_cids = sorted(
+            int(r.centroid_id)
+            for r in probes.select("centroid_id").distinct().collect()
+        )
+        lists = _live_rows(spark, path, kind, probe_cids)
+        cands = lists.join(probes, "centroid_id")
+        if kind == "ivf":
+            if exclude_query_ids:
+                cands = cands.filter(F.col("vec_id") != F.col("query_id"))
+            elem_t = lists.schema["embedding"].dataType
+            return _cosine_top_k(
+                cands.select(
+                    "query_id",
+                    "vec_id",
+                    F.col("qemb").cast(elem_t).alias("qv"),
+                    "embedding",
+                ),
+                k,
             )
-            sids = ids[order]
-            scds = cds[order]
-            if lkp is None:
-                # one gather over the WHOLE batch: row r reads its
-                # query's table — values identical to the per-query
-                # form (each table row is per-query independent)
-                tabs = _pq_dtabs(books_, qx_all)
-                inv = np.repeat(np.arange(len(starts)), ends - starts)
-                ad_all = tabs[inv[:, None], blocks, scds].sum(axis=1)
-            else:
-                # residual tables are per-(query, probed list): build
-                # ONE table per DISTINCT (query, centroid) pair in
-                # the batch — ≤ #groups × nprobe pairs — then the
-                # same single gather as the flat branch. Values are
-                # bit-identical to the round-9 per-(group, centroid)
-                # loop: 2-D elementwise subtraction equals the 1-D
-                # form per row, and each _pq_dtabs row is
-                # independent.
-                scids, scmat = lkp
-                sccol = ccol[order]
-                inv_g = np.repeat(np.arange(len(starts)), ends - starts)
-                cpos = np.minimum(
-                    np.searchsorted(scids, sccol), len(scids) - 1
-                )
-                if not np.array_equal(scids[cpos], sccol):
-                    # same loud out-of-sync contract as pq_encode's
-                    # kernel: an unclamped miss makes cpos ==
-                    # len(scids) and the pair encoding below silently
-                    # decodes into the NEXT group's query row,
-                    # scoring garbage distances (round-11 ADVICE)
-                    raise ValueError(
-                        "centroid_id(s) in the batch are not in the "
-                        "provided quantizer — assignments and "
-                        "quantizer are out of sync"
-                    )
-                pair = inv_g * len(scids) + cpos
-                upair, pinv = np.unique(pair, return_inverse=True)
-                shifted = (
-                    qx_all[upair // len(scids)] - scmat[upair % len(scids)]
-                )
-                tabs = _pq_dtabs(books_, shifted)
-                ad_all = tabs[pinv[:, None], blocks, scds].sum(axis=1)
-            for gi in range(len(starts)):
-                lo, hi = starts[gi], ends[gi]
-                q = int(sq[lo])
-                b_ids = sids[lo:hi]
-                ad = ad_all[lo:hi]
-                if excl:
-                    keep = b_ids != q
-                    b_ids, ad = b_ids[keep], ad[keep]
-                sel = np.lexsort((b_ids, ad))[:topn]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(len(sel), q, dtype=np.int64),
-                        "vec_id": b_ids[sel],
-                        "adist": ad[sel],
-                    }
-                )
-
-    scored = cands.mapInPandas(
-        adc_bulk, "query_id long, vec_id long, adist double"
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    shortlisted = (
-        scored.withColumn("ark", F.row_number().over(wa))
-        .filter(F.col("ark") <= top_s)
-        .select("query_id", "vec_id")
-    )
+        scored = _adc_probed_scan(
+            cands.select("query_id", "vec_id", "pq_codes", "qemb", "centroid_id"),
+            books,
+            _normalized_centroid_lookup(cq) if kind == "ivfpq_residual" else None,
+            top_s,
+            exclude_query_ids,
+        )
     return _bulk_exact_tail(
         spark,
         queries,
-        shortlisted,
+        _shortlist(scored, top_s),
         top_s,
         k,
         emb,
         vector_store,
+        n_queries=nq,
         prune_max_ids=prune_max_ids,
     )
 

@@ -121,20 +121,20 @@ def _qframe(emb: DataFrame) -> DataFrame:
 
 def _ann_index_dir(sf_dir: str, emb: DataFrame) -> str:
     """Build (once per process per corpus) the persisted ANN serving
-    indexes — ``{dir}/ivf`` (write_ivf_index: centroid quantizer +
-    hive-partitioned inverted lists) and ``{dir}/pq`` (write_pq_index:
-    codebooks + 16-byte code table) — in a scratch directory, so the
-    gate exercises the paths a 100 TB deployment actually serves from
-    rather than only the live recompute forms."""
+    indexes — one per kind of ``similarity.write_ann_index``: ``ivf``
+    (centroid quantizer + hive-partitioned inverted lists), ``pq``
+    (codebooks + 16-byte code table), ``ivfpq`` and its residual mode
+    — in a scratch directory, so the gate exercises the paths a 100 TB
+    deployment actually serves from rather than only the live
+    recompute forms."""
     if sf_dir not in _INDEX_DIRS:
         import tempfile
 
         base = tempfile.mkdtemp(prefix="sgraft_ann_idx_")
-        similarity.write_ivf_index(emb, f"{base}/ivf")
-        similarity.write_pq_index(emb, f"{base}/pq")
-        similarity.write_ivfpq_index(emb, f"{base}/ivfpq")
+        for kind in ("ivf", "pq", "ivfpq"):
+            similarity.write_ann_index(emb, f"{base}/{kind}", kind)
         # round 8: the IVFADC residual-encoding mode of the hybrid
-        similarity.write_ivfpq_index(emb, f"{base}/ivfpq_res", residual=True)
+        similarity.write_ann_index(emb, f"{base}/ivfpq_res", "ivfpq_residual")
         # round 8 (ANN10): the partitioned raw-vector store — the
         # production re-rank source (directory-pruned point lookups
         # instead of a full raw-vector scan); served by the
@@ -146,15 +146,14 @@ def _ann_index_dir(sf_dir: str, emb: DataFrame) -> str:
         # the gate also watches the incremental-ingest serving shape
         older = emb.filter(F.col("vec_id") % 5 != 4)
         batch = emb.filter(F.col("vec_id") % 5 == 4)
-        similarity.write_ivf_index(older, f"{base}/ivf_app")
-        similarity.append_ivf_index(batch, f"{base}/ivf_app", 1)
-        similarity.write_pq_index(older, f"{base}/pq_app")
-        similarity.append_pq_index(batch, f"{base}/pq_app", 1)
+        for kind in ("ivf", "pq"):
+            similarity.write_ann_index(older, f"{base}/{kind}_app", kind)
+            similarity.append_ann_index(batch, f"{base}/{kind}_app", 1)
         # the CHANGE-FEED form: base build on a POISONED corpus —
         # the live corpus minus a held-out slice, plus each query's
         # two cosine-1.0 PHANTOM copies (_FOLD_IMPOSTORS) — then one
         # read_changes-shaped batch folds through
-        # apply_changes_to_*_index: phantom DELETEs (tombstones) and
+        # apply_changes_to_ann_index: phantom DELETEs (tombstones) and
         # held-out INSERTs (appends). Probing the folded index must
         # recall the TRUE neighbors: a dead tombstone filter leaves
         # phantoms on top of every query and fails both floors (see
@@ -170,9 +169,6 @@ def _ann_index_dir(sf_dir: str, emb: DataFrame) -> str:
         eslim = emb.select("vec_id", "embedding")
         held = F.col("vec_id") % 97 == 13
         poisoned = eslim.filter(~held).unionByName(phantoms)
-        similarity.write_ivf_index(poisoned, f"{base}/ivf_fold")
-        similarity.write_pq_index(poisoned, f"{base}/pq_fold")
-        similarity.write_ivfpq_index(poisoned, f"{base}/ivfpq_fold")
         changes = (
             phantoms.withColumn("_change_type", F.lit("delete"))
             .unionByName(
@@ -181,15 +177,11 @@ def _ann_index_dir(sf_dir: str, emb: DataFrame) -> str:
                 )
             )
         )
-        similarity.apply_changes_to_ivf_index(
-            spark, f"{base}/ivf_fold", changes, 1
-        )
-        similarity.apply_changes_to_pq_index(
-            spark, f"{base}/pq_fold", changes, 1
-        )
-        similarity.apply_changes_to_ivfpq_index(
-            spark, f"{base}/ivfpq_fold", changes, 1
-        )
+        for kind in ("ivf", "pq", "ivfpq"):
+            similarity.write_ann_index(poisoned, f"{base}/{kind}_fold", kind)
+            similarity.apply_changes_to_ann_index(
+                spark, f"{base}/{kind}_fold", changes, 1
+            )
         _INDEX_DIRS[sf_dir] = base
     return _INDEX_DIRS[sf_dir]
 
@@ -346,8 +338,8 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank of the ADC shortlist (operators/similarity.pq_topk).
 
     The ``ivf_indexed`` / ``pq_indexed`` legs are the PERSISTED
-    serving paths (write_ivf_index → ivf_topk_indexed, write_pq_index
-    → pq_topk_indexed): the index is built once per process into a
+    serving paths (write_ann_index → ann_topk_indexed, kinds ivf and
+    pq): the index is built once per process into a
     scratch dir and queried back with the same query vectors — each
     is bit-identical to its live twin (tests/test_similarity.py), and
     gating them here means the hard correctness signal watches the
@@ -356,7 +348,7 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ``ivf_appended`` / ``pq_appended`` legs gate the DAILY-INGEST
     form on top: the index is built on 4/5 of the corpus and the
     held-out 1/5 (which contains query id 4) folds in through
-    ``append_ivf_index`` / ``append_pq_index`` — stored quantizer and
+    ``append_ann_index`` — stored quantizer and
     codebooks, batch-sized assignment/encode, the batch's own
     ``append_id`` partitions. Equality with a same-quantizer one-shot
     rebuild is pytest-pinned; the gate asserts the recall bound holds
@@ -368,7 +360,7 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     query gets two cosine-1.0 PHANTOM copies under out-of-corpus
     ids, and a small corpus slice is held out), and one
     ``read_changes``-vocabulary batch folds through
-    ``apply_changes_to_{{ivf,pq}}_index``: phantom deletes become
+    ``apply_changes_to_ann_index``: phantom deletes become
     generation-scoped tombstones, held-out inserts append. The legs
     are adversarial by construction: if tombstones are dropped or
     ignored at probe time, every query's top-3 floods with phantoms
@@ -410,26 +402,26 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivf": similarity.ivf_topk(emb, QUERY_IDS, K),
         "ivf_refined": similarity.ivf_topk(emb, QUERY_IDS, K, refine=True),
         "pq": similarity.pq_topk(emb, QUERY_IDS, K),
-        "ivf_indexed": similarity.ivf_topk_indexed(
-            spark, f"{idx}/ivf", queries, K
+        "ivf_indexed": similarity.ann_topk_indexed(
+            spark, f"{idx}/ivf", queries, k=K
         ),
-        "pq_indexed": similarity.pq_topk_indexed(
+        "pq_indexed": similarity.ann_topk_indexed(
             spark, f"{idx}/pq", queries, emb, K
         ),
-        "ivf_appended": similarity.ivf_topk_indexed(
-            spark, f"{idx}/ivf_app", queries, K
+        "ivf_appended": similarity.ann_topk_indexed(
+            spark, f"{idx}/ivf_app", queries, k=K
         ),
-        "pq_appended": similarity.pq_topk_indexed(
+        "pq_appended": similarity.ann_topk_indexed(
             spark, f"{idx}/pq_app", queries, emb, K
         ),
-        "ivf_folded": similarity.ivf_topk_indexed(
-            spark, f"{idx}/ivf_fold", queries, K
+        "ivf_folded": similarity.ann_topk_indexed(
+            spark, f"{idx}/ivf_fold", queries, k=K
         ),
         # re-rank frame = corpus ∪ phantoms: a phantom code that a
         # broken tombstone path lets through re-ranks at cosine 1.0
         # and floods top-k — passing bare emb would let the exact
         # re-rank silently drop it and rescue the leg
-        "pq_folded": similarity.pq_topk_indexed(
+        "pq_folded": similarity.ann_topk_indexed(
             spark,
             f"{idx}/pq_fold",
             queries,
@@ -439,23 +431,23 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             K,
         ),
         # round 7: the IVF-PQ hybrid serving path (partition-pruned
-        # lists of 16-byte codes; _adc_scan_probed; exact re-rank) —
+        # lists of 16-byte codes; _adc_probed_scan; exact re-rank) —
         # its folded leg gets the same phantom-augmented re-rank frame
         # as pq_folded, for the same no-rescue reason
         # served through the ANN10 vector store (bit-identical to
         # the emb re-rank — pytest-pinned), so the gate watches the
         # fully corpus-size-independent serve: pruned lists AND
         # pruned raw-vector fetch
-        "ivfpq_indexed": similarity.ivfpq_topk_indexed(
+        "ivfpq_indexed": similarity.ann_topk_indexed(
             spark, f"{idx}/ivfpq", queries, k=K,
             vector_store=f"{idx}/vstore",
         ),
         # round 8: residual-mode hybrid (detected from the stored
         # meta — the serve call is identical)
-        "ivfpq_residual": similarity.ivfpq_topk_indexed(
+        "ivfpq_residual": similarity.ann_topk_indexed(
             spark, f"{idx}/ivfpq_res", queries, emb, K
         ),
-        "ivfpq_folded": similarity.ivfpq_topk_indexed(
+        "ivfpq_folded": similarity.ann_topk_indexed(
             spark,
             f"{idx}/ivfpq_fold",
             queries,
@@ -469,15 +461,15 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (deterministic parquet-backed filter, per the bulk
         # contract), the hybrid re-ranks through the vector store
         # like its latency twin
-        "ivfpq_bulk": similarity.ivfpq_topk_bulk(
+        "ivfpq_bulk": similarity.ann_topk_bulk(
             spark, f"{idx}/ivfpq", _qframe(emb), k=K,
             vector_store=f"{idx}/vstore",
         ),
-        "pq_bulk": similarity.pq_topk_bulk(
+        "pq_bulk": similarity.ann_topk_bulk(
             spark, f"{idx}/pq", _qframe(emb), emb, K
         ),
-        "ivf_bulk": similarity.ivf_topk_bulk(
-            spark, f"{idx}/ivf", _qframe(emb), K
+        "ivf_bulk": similarity.ann_topk_bulk(
+            spark, f"{idx}/ivf", _qframe(emb), k=K
         ),
     }
     total = len(QUERY_IDS) * K

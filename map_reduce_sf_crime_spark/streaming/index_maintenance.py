@@ -6,8 +6,9 @@ The batch halves already exist and are individually pinned — the
 micro-batches of Delta-CDF-vocabulary change events, and every
 serving artifact has a signed-ledger fold
 (``apply_changes_to_postings_index`` / ``apply_changes_to_dsir_stats``
-/ ``apply_changes_to_term_stats`` / ``apply_changes_to_{ivf,pq}_index``
-/ ``apply_changes_to_signature_catalog``) whose replays collapse by
+/ ``apply_changes_to_term_stats`` / ``apply_changes_to_ann_index`` /
+``apply_changes_to_vector_store`` / ``apply_changes_to_signature_catalog``)
+whose replays collapse by
 generation. This module is the PRODUCTION wiring between them: one
 Structured Streaming query per maintained artifact,
 
@@ -129,59 +130,39 @@ def maintain_postings_index(
     )
 
 
-def _maintain_ann(apply_changes):
-    """The three ANN maintenance loops differ only in which
-    ``apply_changes_to_*_index`` folds the batch — one factory, same
-    streaming contract as :func:`maintain_postings_index` (gen =
-    gen_base + batch_id; at-least-once foreachBatch × generation-
-    collapsing folds = exactly-once). The embeddings table streams on
-    ``vec_id``; an ``emb_col`` naming drift is the caller's to map
-    (the folds take ``id_col``/``emb_col``, fixed here to the engine's
-    canonical names)."""
-
-    def loop(
-        spark: SparkSession,
-        table_path: str,
-        index_path: str,
-        checkpoint: str,
-        gen_base: int = 1,
-        **kwargs,
-    ):
-        return stream_fold(
-            spark,
-            table_path,
-            ["vec_id"],
-            checkpoint,
-            lambda s, df, gen: apply_changes(s, index_path, df, gen),
-            gen_base=gen_base,
-            **kwargs,
-        )
-
-    return loop
-
-
-def maintain_ivf_index(spark, table_path, index_path, checkpoint, **kwargs):
+def maintain_ann_index(
+    spark: SparkSession,
+    table_path: str,
+    index_path: str,
+    checkpoint: str,
+    gen_base: int = 1,
+    **kwargs,
+):
     """ANN-serving maintenance loop (round 7, the CF3 symmetry the
     round-6 verdict asked for): committed merges of the embeddings
-    table fold into the persisted IVF index — deletes/update
+    table fold into the persisted ANN index at ``index_path``
+    (``similarity.apply_changes_to_ann_index`` — deletes/update
     pre-images tombstone, inserts/post-images append under the
-    stream's generation, ``ivf_topk_indexed`` serves the live corpus.
-    End-to-end (phantom deletes through the stream) pinned in
+    stream's generation), and ``ann_topk_indexed`` serves the live
+    corpus. Same streaming contract as :func:`maintain_postings_index`
+    (gen = gen_base + batch_id; at-least-once foreachBatch ×
+    generation-collapsing folds = exactly-once). One loop for every
+    index kind: each fold reads the kind — and a hybrid's flat or
+    residual encoding — from the index's own artifacts, so the loop
+    never needs to be told. The embeddings table streams on
+    ``vec_id`` with the engine's canonical column names. End-to-end
+    (phantom deletes through the stream, every kind) pinned in
     tests/test_streaming_maintenance.py."""
-    from ..operators.similarity import apply_changes_to_ivf_index
+    from ..operators.similarity import apply_changes_to_ann_index
 
-    return _maintain_ann(apply_changes_to_ivf_index)(
-        spark, table_path, index_path, checkpoint, **kwargs
-    )
-
-
-def maintain_pq_index(spark, table_path, index_path, checkpoint, **kwargs):
-    """PQ twin of :func:`maintain_ivf_index` (stored codebooks encode
-    each batch; the code table is what folds)."""
-    from ..operators.similarity import apply_changes_to_pq_index
-
-    return _maintain_ann(apply_changes_to_pq_index)(
-        spark, table_path, index_path, checkpoint, **kwargs
+    return stream_fold(
+        spark,
+        table_path,
+        ["vec_id"],
+        checkpoint,
+        lambda s, df, gen: apply_changes_to_ann_index(s, index_path, df, gen),
+        gen_base=gen_base,
+        **kwargs,
     )
 
 
@@ -193,8 +174,8 @@ def maintain_vector_store(
     raw-vector store (``apply_changes_to_vector_store`` — new/updated
     vectors append under the stream's generation, deletes append
     NULL-embedding tombstones), so the PQ-family serves'
-    ``vector_store=`` re-rank stays live alongside the index the
-    other three loops maintain. Same exactly-once composition: the
+    ``vector_store=`` re-rank stays live alongside the index
+    :func:`maintain_ann_index` maintains. Same exactly-once composition: the
     fold's full-row distinct collapses foreachBatch replays."""
     from ..operators.similarity import apply_changes_to_vector_store
 
@@ -208,19 +189,4 @@ def maintain_vector_store(
         ),
         gen_base=gen_base,
         **kwargs,
-    )
-
-
-def maintain_ivfpq_index(spark, table_path, index_path, checkpoint, **kwargs):
-    """IVF-PQ hybrid twin of :func:`maintain_ivf_index` — the serving
-    path for embeddings at 100 TB (partition-pruned lists of 16-byte
-    codes) stays live through the same one-liner. Works unchanged on a
-    RESIDUAL-mode index (round 8): every streamed fold's append reads
-    the encoding mode from the index's own ``meta`` artifact, so the
-    loop never needs to be told — pinned end-to-end in
-    tests/test_streaming_maintenance.py's ``ivfpq_res`` leg."""
-    from ..operators.similarity import apply_changes_to_ivfpq_index
-
-    return _maintain_ann(apply_changes_to_ivfpq_index)(
-        spark, table_path, index_path, checkpoint, **kwargs
     )

@@ -221,3 +221,27 @@ def test_failed_unpersist_is_counted_and_warned(spark):
     assert caching._UNPERSIST_FAILURES == unpersist0 + 3
     assert not caching._TRACKED
     assert caching._RELEASE_FAILURES == release0
+
+
+def test_gateway_key_distinct_across_freed_gateways(monkeypatch):
+    """``gateway_key`` must never hand a new gateway the key of a
+    freed one. CPython reuses an object's id once it is freed, so 50
+    fresh gateways, each dropped before the next, would collide on
+    ``id(gw)``."""
+    from pyspark import SparkContext
+
+    class Gateway:
+        pass
+
+    # monkeypatch restores the live gateway afterwards; the loop then
+    # assigns directly, because every monkeypatch.setattr would keep
+    # the replaced gateway alive in its undo list
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    keys, stable = [], True
+    for _ in range(50):
+        SparkContext._gateway = Gateway()
+        keys.append(caching.gateway_key())
+        stable = stable and caching.gateway_key() == keys[-1]
+        SparkContext._gateway = None  # drop it: its id is free again
+    assert stable
+    assert len(set(keys)) == 50

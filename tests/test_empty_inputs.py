@@ -109,14 +109,14 @@ def test_index_builds_fail_loudly_on_empty_corpus(spark):
     )
     shutil.rmtree(scratch, ignore_errors=True)
     for fn in (
-        lambda: similarity.write_ivf_index(emb, f"{scratch}/ivf"),
-        lambda: similarity.write_ivf_index(
-            emb, f"{scratch}/ivf", refine=False
+        lambda: similarity.write_ann_index(emb, f"{scratch}/ivf", "ivf"),
+        lambda: similarity.write_ann_index(
+            emb, f"{scratch}/ivf", "ivf", refine=False
         ),
-        lambda: similarity.write_pq_index(emb, f"{scratch}/pq"),
-        lambda: similarity.write_ivfpq_index(emb, f"{scratch}/hyb"),
-        lambda: similarity.write_ivfpq_index(
-            emb, f"{scratch}/hybres", residual=True
+        lambda: similarity.write_ann_index(emb, f"{scratch}/pq", "pq"),
+        lambda: similarity.write_ann_index(emb, f"{scratch}/hyb", "ivfpq"),
+        lambda: similarity.write_ann_index(
+            emb, f"{scratch}/hybres", "ivfpq_residual"
         ),
     ):
         with pytest.raises(ValueError, match="EMPTY corpus"):
@@ -126,7 +126,7 @@ def test_index_builds_fail_loudly_on_empty_corpus(spark):
     full = load_table(spark, SF_SMOKE, "embeddings").select(
         "vec_id", "embedding"
     )
-    similarity.write_ivfpq_index(full, f"{scratch}/ok", n_centroids=8)
+    similarity.write_ann_index(full, f"{scratch}/ok", "ivfpq", n_centroids=8)
     queries = [
         (r["vec_id"], list(r["embedding"]))
         for r in full.filter(F.col("vec_id").isin(1, 2)).collect()
@@ -134,16 +134,16 @@ def test_index_builds_fail_loudly_on_empty_corpus(spark):
     before = sorted(
         map(
             tuple,
-            similarity.ivfpq_topk_indexed(
+            similarity.ann_topk_indexed(
                 spark, f"{scratch}/ok", queries, full, 3
             ).collect(),
         )
     )
-    similarity.append_ivfpq_index(emb, f"{scratch}/ok", 1)
+    similarity.append_ann_index(emb, f"{scratch}/ok", 1)
     after = sorted(
         map(
             tuple,
-            similarity.ivfpq_topk_indexed(
+            similarity.ann_topk_indexed(
                 spark, f"{scratch}/ok", queries, full, 3
             ).collect(),
         )

@@ -1205,7 +1205,7 @@ def test_change_feed_read_changes(spark):
 def test_change_feed_drives_index_fold(spark):
     """The full incremental daily loop, end to end: a lakehouse MERGE
     on the embeddings table (updates + deletes + inserts, archived) →
-    read_changes → apply_changes_to_ivf_index. The folded index
+    read_changes → apply_changes_to_ann_index. The folded index
     answers probes EXACTLY like a same-quantizer rebuild from the
     post-merge table — the churn-sized path replaces the full
     reprocess with no quality cliff."""
@@ -1232,7 +1232,7 @@ def test_change_feed_drives_index_fold(spark):
         key_cols=["vec_id"], partition_cols=["label"], archive=True,
     )
     base = read_partitioned(spark, path).select("vec_id", "embedding")
-    similarity.write_ivf_index(base, idx_a, n_centroids=8)
+    similarity.write_ann_index(base, idx_a, "ivf", n_centroids=8)
     queries = [
         (r["vec_id"], list(r["embedding"]))
         for r in base.filter(F.col("vec_id") < 4).collect()
@@ -1261,17 +1261,17 @@ def test_change_feed_drives_index_fold(spark):
     assert {r._change_type for r in feed.select("_change_type").distinct().collect()} == {
         "insert", "delete", "update_preimage", "update_postimage"
     }
-    similarity.apply_changes_to_ivf_index(
+    similarity.apply_changes_to_ann_index(
         spark, idx_a, feed.select("vec_id", "embedding", "_change_type"),
         append_id=1,
     )
     cq = similarity._stored_centroids(spark, idx_a)
     post = read_partitioned(spark, path).select("vec_id", "embedding")
-    similarity.write_ivf_index(post, idx_b, centroids=cq)
-    got = similarity.ivf_topk_indexed(
+    similarity.write_ann_index(post, idx_b, "ivf", centroids=cq)
+    got = similarity.ann_topk_indexed(
         spark, idx_a, queries, k=5, exclude_query_ids=False
     )
-    want = similarity.ivf_topk_indexed(
+    want = similarity.ann_topk_indexed(
         spark, idx_b, queries, k=5, exclude_query_ids=False
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

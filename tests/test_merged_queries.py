@@ -79,12 +79,12 @@ def test_ann_fold_leg_is_adversarial(spark):
         (
             "ivf_fold",
             ("lists", "_tombstones"),
-            lambda p: similarity.ivf_topk_indexed(spark, p, queries, sq.K),
+            lambda p: similarity.ann_topk_indexed(spark, p, queries, k=sq.K),
         ),
         (
             "pq_fold",
             ("codes", "_tombstones"),
-            lambda p: similarity.pq_topk_indexed(
+            lambda p: similarity.ann_topk_indexed(
                 spark, p, queries, emb_aug, sq.K
             ),
         ),

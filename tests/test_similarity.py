@@ -10,7 +10,7 @@ from map_reduce_sf_crime_spark.functions.vectors import cosine_col
 from map_reduce_sf_crime_spark.operators import similarity
 from map_reduce_sf_crime_spark.sources.parquet import load_table
 
-from .conftest import SF_CHECK
+from .conftest import SF_CHECK, SF_SMOKE
 
 QUERY_IDS = list(range(10))
 
@@ -179,7 +179,7 @@ def test_ivf_index_persisted_parity(spark):
     )
     shutil.rmtree(base, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
-    similarity.write_ivf_index(emb, base, n_centroids=8)
+    similarity.write_ann_index(emb, base, "ivf", n_centroids=8)
 
     # hive layout on disk: one directory per NON-EMPTY inverted list
     # (the refined quantizer may leave a centroid memberless)
@@ -195,7 +195,7 @@ def test_ivf_index_persisted_parity(spark):
     # quantizer (round 8) and kmeans_centroids is deterministic, so
     # live and indexed train the identical quantizer
     live = similarity.ivf_topk(emb, qids, k=3, n_centroids=8, refine=True).collect()
-    idx_df = similarity.ivf_topk_indexed(spark, base, queries, k=3)
+    idx_df = similarity.ann_topk_indexed(spark, base, queries, k=3)
     indexed = idx_df.collect()
     key = lambda r: (r.query_id, r.rk)
     assert sorted(map(tuple, live)) == sorted(map(tuple, indexed))
@@ -236,7 +236,7 @@ def test_pq_index_persisted_parity(spark):
     )
     shutil.rmtree(base, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
-    similarity.write_pq_index(emb, base)
+    similarity.write_ann_index(emb, base, "pq")
 
     # the code table is the compressed corpus: one row per vector
     # (append_id is the hive batch-partition column, base build = 0)
@@ -251,7 +251,7 @@ def test_pq_index_persisted_parity(spark):
         for r in emb.filter(F.col("vec_id").isin(qids)).collect()
     ]
     live = similarity.pq_topk(emb, qids, k=3).collect()
-    indexed = similarity.pq_topk_indexed(spark, base, queries, emb, k=3).collect()
+    indexed = similarity.ann_topk_indexed(spark, base, queries, emb, k=3).collect()
     assert sorted(map(tuple, live)) == sorted(map(tuple, indexed))
     shutil.rmtree(base, ignore_errors=True)
 
@@ -271,10 +271,10 @@ def test_indexed_external_namespace_no_self_exclusion(spark):
     )
     shutil.rmtree(base, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
-    similarity.write_ivf_index(emb, base, n_centroids=8)
+    similarity.write_ann_index(emb, base, "ivf", n_centroids=8)
     r = emb.filter(F.col("vec_id") == 3).collect()[0]
     queries = [(3, list(r["embedding"]))]  # id collides with corpus
-    rows = similarity.ivf_topk_indexed(
+    rows = similarity.ann_topk_indexed(
         spark, base, queries, k=3, exclude_query_ids=False
     ).collect()
     top = min(rows, key=lambda x: x.rk)
@@ -284,8 +284,8 @@ def test_indexed_external_namespace_no_self_exclusion(spark):
 
 @pytest.mark.slow
 def test_index_append_daily_loop(spark):
-    """The serving tier's daily loop (append_ivf_index /
-    append_pq_index): appending a new embedding batch to a persisted
+    """The serving tier's daily loop (append_ann_index):
+    appending a new embedding batch to a persisted
     index under the STORED quantizer/codebooks yields query results
     identical to a one-shot rebuild over base+batch with that same
     quantizer, and a replayed append (same append_id) changes
@@ -309,12 +309,12 @@ def test_index_append_daily_loop(spark):
     ]
 
     # IVF: base build + append  ==  rebuild over all, same quantizer
-    similarity.write_ivf_index(base_df, paths["ivf_a"], n_centroids=8)
-    similarity.append_ivf_index(batch, paths["ivf_a"], append_id=1)
+    similarity.write_ann_index(base_df, paths["ivf_a"], "ivf", n_centroids=8)
+    similarity.append_ann_index(batch, paths["ivf_a"], append_id=1)
     cq = similarity._stored_centroids(spark, paths["ivf_a"])
-    similarity.write_ivf_index(emb, paths["ivf_b"], centroids=cq)
-    got = similarity.ivf_topk_indexed(spark, paths["ivf_a"], queries, k=3)
-    want = similarity.ivf_topk_indexed(spark, paths["ivf_b"], queries, k=3)
+    similarity.write_ann_index(emb, paths["ivf_b"], "ivf", centroids=cq)
+    got = similarity.ann_topk_indexed(spark, paths["ivf_a"], queries, k=3)
+    want = similarity.ann_topk_indexed(spark, paths["ivf_b"], queries, k=3)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     # the batch landed as its own append_id partitions under the lists
     lists_dir = os.path.join(paths["ivf_a"], "lists")
@@ -324,33 +324,33 @@ def test_index_append_daily_loop(spark):
     ]
     assert appended
     # replay: same batch, same append_id — results identical
-    similarity.append_ivf_index(batch, paths["ivf_a"], append_id=1)
-    replayed = similarity.ivf_topk_indexed(spark, paths["ivf_a"], queries, k=3)
+    similarity.append_ann_index(batch, paths["ivf_a"], append_id=1)
+    replayed = similarity.ann_topk_indexed(spark, paths["ivf_a"], queries, k=3)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, replayed.collect())
     )
 
     # PQ: same contract with stored codebooks
-    similarity.write_pq_index(base_df, paths["pq_a"])
-    similarity.append_pq_index(batch, paths["pq_a"], append_id=1)
+    similarity.write_ann_index(base_df, paths["pq_a"], "pq")
+    similarity.append_ann_index(batch, paths["pq_a"], append_id=1)
     books = similarity._stored_codebooks(spark, paths["pq_a"])
-    similarity.write_pq_index(emb, paths["pq_b"], codebooks=books)
-    got_pq = similarity.pq_topk_indexed(spark, paths["pq_a"], queries, emb, k=3)
-    want_pq = similarity.pq_topk_indexed(spark, paths["pq_b"], queries, emb, k=3)
+    similarity.write_ann_index(emb, paths["pq_b"], "pq", codebooks=books)
+    got_pq = similarity.ann_topk_indexed(spark, paths["pq_a"], queries, emb, k=3)
+    want_pq = similarity.ann_topk_indexed(spark, paths["pq_b"], queries, emb, k=3)
     assert sorted(map(tuple, got_pq.collect())) == sorted(
         map(tuple, want_pq.collect())
     )
-    similarity.append_pq_index(batch, paths["pq_a"], append_id=1)
-    again = similarity.pq_topk_indexed(spark, paths["pq_a"], queries, emb, k=3)
+    similarity.append_ann_index(batch, paths["pq_a"], append_id=1)
+    again = similarity.ann_topk_indexed(spark, paths["pq_a"], queries, emb, k=3)
     assert sorted(map(tuple, got_pq.collect())) == sorted(map(tuple, again.collect()))
 
     # the base build owns append_id 0 and appends must not claim it
     import pytest
 
     with pytest.raises(ValueError):
-        similarity.append_ivf_index(batch, paths["ivf_a"], append_id=0)
+        similarity.append_ann_index(batch, paths["ivf_a"], append_id=0)
     with pytest.raises(ValueError):
-        similarity.append_pq_index(batch, paths["pq_a"], append_id=0)
+        similarity.append_ann_index(batch, paths["pq_a"], append_id=0)
 
     # a REBUILD truncates prior appends even when the session default
     # is dynamic overwrite (the build writes pin static explicitly) —
@@ -360,14 +360,14 @@ def test_index_append_daily_loop(spark):
     prev = spark.conf.get(conf_key)
     spark.conf.set(conf_key, "dynamic")
     try:
-        similarity.write_ivf_index(emb, paths["ivf_a"], n_centroids=8)
+        similarity.write_ann_index(emb, paths["ivf_a"], "ivf", n_centroids=8)
         leftover = [
             d for c in os.listdir(lists_dir) if c.startswith("centroid_id=")
             for d in os.listdir(os.path.join(lists_dir, c))
             if d == "append_id=1"
         ]
         assert not leftover
-        similarity.write_pq_index(emb, paths["pq_a"])
+        similarity.write_ann_index(emb, paths["pq_a"], "pq")
         codes_dir = os.path.join(paths["pq_a"], "codes")
         assert "append_id=1" not in os.listdir(codes_dir)
     finally:
@@ -629,7 +629,7 @@ def test_semdedup_bounded_total_pairs_linear(spark):
 @pytest.mark.slow
 def test_index_change_feed_fold(spark):
     """Tombstoned delete/update for the persisted indexes
-    (apply_changes_to_ivf_index / apply_changes_to_pq_index): folding
+    (apply_changes_to_ann_index): folding
     a Delta-CDF-vocabulary change batch (deletes, update pre+post
     pairs, inserts) into a persisted index makes probes see EXACTLY
     the post-change corpus — pinned against a same-quantizer rebuild
@@ -687,27 +687,29 @@ def test_index_change_feed_fold(spark):
         return sorted(map(tuple, df.collect()))
 
     # IVF: fold == same-quantizer rebuild over the post corpus
-    similarity.write_ivf_index(base, paths["ivf_a"], n_centroids=8)
-    similarity.apply_changes_to_ivf_index(
+    similarity.write_ann_index(base, paths["ivf_a"], "ivf", n_centroids=8)
+    similarity.apply_changes_to_ann_index(
         spark, paths["ivf_a"], changes, append_id=1
     )
     cq = similarity._stored_centroids(spark, paths["ivf_a"])
-    similarity.write_ivf_index(post_corpus, paths["ivf_b"], centroids=cq)
-    got = similarity.ivf_topk_indexed(spark, paths["ivf_a"], queries, k=3)
-    want = similarity.ivf_topk_indexed(spark, paths["ivf_b"], queries, k=3)
+    similarity.write_ann_index(
+        post_corpus, paths["ivf_b"], "ivf", centroids=cq
+    )
+    got = similarity.ann_topk_indexed(spark, paths["ivf_a"], queries, k=3)
+    want = similarity.ann_topk_indexed(spark, paths["ivf_b"], queries, k=3)
     assert rows(got) == rows(want)
     # deleted ids never surface, even scanning EVERY list (nprobe=all)
     # with k covering the whole corpus
-    deep = similarity.ivf_topk_indexed(
+    deep = similarity.ann_topk_indexed(
         spark, paths["ivf_a"], queries, k=10_000, nprobe=8
     )
     dead_ids = {r.vec_id for r in deletes.collect()}
     assert not ({r.vec_id for r in deep.collect()} & dead_ids)
     # replay: identical
-    similarity.apply_changes_to_ivf_index(
+    similarity.apply_changes_to_ann_index(
         spark, paths["ivf_a"], changes, append_id=1
     )
-    assert rows(similarity.ivf_topk_indexed(spark, paths["ivf_a"], queries, k=3)) == rows(got)
+    assert rows(similarity.ann_topk_indexed(spark, paths["ivf_a"], queries, k=3)) == rows(got)
     # generation scoping: a later batch re-inserts one deleted id —
     # the new copy survives the old tombstone
     revive_id = min(dead_ids)
@@ -715,10 +717,10 @@ def test_index_change_feed_fold(spark):
         base.filter(F.col("vec_id") == revive_id)
         .withColumn("_change_type", F.lit("insert"))
     )
-    similarity.apply_changes_to_ivf_index(
+    similarity.apply_changes_to_ann_index(
         spark, paths["ivf_a"], revive, append_id=2
     )
-    deep2 = similarity.ivf_topk_indexed(
+    deep2 = similarity.ann_topk_indexed(
         spark, paths["ivf_a"], queries, k=10_000, nprobe=8,
         exclude_query_ids=False,
     )
@@ -729,32 +731,34 @@ def test_index_change_feed_fold(spark):
     assert per_query.count(revive_id) == 1
 
     # PQ: same contract through the stored codebooks
-    similarity.write_pq_index(base, paths["pq_a"])
-    similarity.apply_changes_to_pq_index(
+    similarity.write_ann_index(base, paths["pq_a"], "pq")
+    similarity.apply_changes_to_ann_index(
         spark, paths["pq_a"], changes, append_id=1
     )
     books = similarity._stored_codebooks(spark, paths["pq_a"])
-    similarity.write_pq_index(post_corpus, paths["pq_b"], codebooks=books)
-    got_pq = similarity.pq_topk_indexed(
+    similarity.write_ann_index(
+        post_corpus, paths["pq_b"], "pq", codebooks=books
+    )
+    got_pq = similarity.ann_topk_indexed(
         spark, paths["pq_a"], queries, post_corpus, k=3
     )
-    want_pq = similarity.pq_topk_indexed(
+    want_pq = similarity.ann_topk_indexed(
         spark, paths["pq_b"], queries, post_corpus, k=3
     )
     assert rows(got_pq) == rows(want_pq)
-    similarity.apply_changes_to_pq_index(
+    similarity.apply_changes_to_ann_index(
         spark, paths["pq_a"], changes, append_id=1
     )
     assert rows(
-        similarity.pq_topk_indexed(spark, paths["pq_a"], queries, post_corpus, k=3)
+        similarity.ann_topk_indexed(spark, paths["pq_a"], queries, post_corpus, k=3)
     ) == rows(got_pq)
 
     # a REBUILD clears the tombstone line (else stale tombstones would
     # kill the fresh base's append_id=0 rows)
     assert os.path.isdir(os.path.join(paths["ivf_a"], "lists", "_tombstones"))
-    similarity.write_ivf_index(emb, paths["ivf_a"], n_centroids=8)
+    similarity.write_ann_index(emb, paths["ivf_a"], "ivf", n_centroids=8)
     assert not os.path.isdir(os.path.join(paths["ivf_a"], "lists", "_tombstones"))
-    full = similarity.ivf_topk_indexed(
+    full = similarity.ann_topk_indexed(
         spark, paths["ivf_a"], queries, k=10_000, nprobe=8,
         exclude_query_ids=False,
     )
@@ -769,7 +773,7 @@ def test_index_change_feed_fold(spark):
 
 @pytest.mark.slow
 def test_index_compaction_purges_tombstones(spark):
-    """compact_ivf_index / compact_pq_index: after change-feed folds,
+    """compact_ann_index: after change-feed folds,
     compaction physically removes tombstoned rows and drops the
     tombstone set, with probes bit-identical before and after (the
     layout-preserving rewrite keeps every row's generation, so even
@@ -803,16 +807,16 @@ def test_index_compaction_purges_tombstones(spark):
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    similarity.write_ivf_index(base, ivf, n_centroids=8)
-    similarity.apply_changes_to_ivf_index(spark, ivf, changes, append_id=1)
-    similarity.write_pq_index(base, pq)
-    similarity.apply_changes_to_pq_index(spark, pq, changes, append_id=1)
+    similarity.write_ann_index(base, ivf, "ivf", n_centroids=8)
+    similarity.apply_changes_to_ann_index(spark, ivf, changes, append_id=1)
+    similarity.write_ann_index(base, pq, "pq")
+    similarity.apply_changes_to_ann_index(spark, pq, changes, append_id=1)
 
-    before_ivf = rows(similarity.ivf_topk_indexed(spark, ivf, queries, k=3))
-    before_pq = rows(similarity.pq_topk_indexed(spark, pq, queries, emb, k=3))
+    before_ivf = rows(similarity.ann_topk_indexed(spark, ivf, queries, k=3))
+    before_pq = rows(similarity.ann_topk_indexed(spark, pq, queries, emb, k=3))
 
-    similarity.compact_ivf_index(spark, ivf)
-    similarity.compact_pq_index(spark, pq)
+    similarity.compact_ann_index(spark, ivf)
+    similarity.compact_ann_index(spark, pq)
     assert not os.path.exists(os.path.join(ivf, "lists", "_tombstones"))
     assert not os.path.exists(os.path.join(pq, "codes", "_tombstones"))
     # every generation folded back into the base layout
@@ -825,29 +829,29 @@ def test_index_compaction_purges_tombstones(spark):
         d for d in os.listdir(os.path.join(pq, "codes"))
         if d.startswith("append_id=")
     ) == ["append_id=0"]
-    assert rows(similarity.ivf_topk_indexed(spark, ivf, queries, k=3)) == before_ivf
-    assert rows(similarity.pq_topk_indexed(spark, pq, queries, emb, k=3)) == before_pq
+    assert rows(similarity.ann_topk_indexed(spark, ivf, queries, k=3)) == before_ivf
+    assert rows(similarity.ann_topk_indexed(spark, pq, queries, emb, k=3)) == before_pq
     # deleted rows are physically gone: a full-depth scan of every
     # list never surfaces them even with no tombstone filter left
-    deep = similarity.ivf_topk_indexed(spark, ivf, queries, k=10_000, nprobe=8)
+    deep = similarity.ann_topk_indexed(spark, ivf, queries, k=10_000, nprobe=8)
     assert not ({r.vec_id for r in deep.collect()} & dead_ids)
 
     # crash residues. (a) partial rewrite, no rename yet → discarded
     shutil.copytree(os.path.join(ivf, "lists"), os.path.join(ivf, "lists.compact"))
-    assert "discarded" in similarity.recover_index_compaction(spark, ivf, "lists")
+    assert "discarded" in similarity.recover_index_compaction(spark, ivf)
     assert not os.path.exists(os.path.join(ivf, "lists.compact"))
     # (b) between the renames: live missing, old + compact present
     shutil.copytree(os.path.join(ivf, "lists"), os.path.join(ivf, "lists.compact"))
     os.rename(os.path.join(ivf, "lists"), os.path.join(ivf, "lists.old"))
-    assert "finished swap" in similarity.recover_index_compaction(spark, ivf, "lists")
-    assert rows(similarity.ivf_topk_indexed(spark, ivf, queries, k=3)) == before_ivf
+    assert "finished swap" in similarity.recover_index_compaction(spark, ivf)
+    assert rows(similarity.ann_topk_indexed(spark, ivf, queries, k=3)) == before_ivf
     # (c) before cleanup: live + old both present
     shutil.copytree(os.path.join(ivf, "lists"), os.path.join(ivf, "lists.old"))
-    assert "cleanup" in similarity.recover_index_compaction(spark, ivf, "lists")
+    assert "cleanup" in similarity.recover_index_compaction(spark, ivf)
     assert not os.path.exists(os.path.join(ivf, "lists.old"))
-    assert rows(similarity.ivf_topk_indexed(spark, ivf, queries, k=3)) == before_ivf
+    assert rows(similarity.ann_topk_indexed(spark, ivf, queries, k=3)) == before_ivf
     # idempotent on a clean index
-    assert similarity.recover_index_compaction(spark, ivf, "lists") == "clean"
+    assert similarity.recover_index_compaction(spark, ivf) == "clean"
     shutil.rmtree(scratch, ignore_errors=True)
 
 
@@ -868,7 +872,7 @@ def _scratch(name: str) -> str:
 @pytest.mark.slow
 def test_ivfpq_all_probe_equals_flat_pq(spark):
     """THE hybrid equality pin: probing ALL lists scans exactly the
-    whole code table, so ivfpq_topk_indexed(nprobe=n_centroids) must
+    whole code table, so ann_topk_indexed(nprobe=n_centroids) must
     be bit-identical to pq_topk_indexed on the same codebooks — the
     pruning is auditably lossless except for the nprobe knob."""
     import shutil
@@ -878,17 +882,19 @@ def test_ivfpq_all_probe_equals_flat_pq(spark):
     shutil.rmtree(flat, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
     books = similarity.pq_codebooks(emb)
-    similarity.write_ivfpq_index(emb, hyb, n_centroids=8, codebooks=books)
-    similarity.write_pq_index(emb, flat, codebooks=books)
+    similarity.write_ann_index(
+        emb, hyb, "ivfpq", n_centroids=8, codebooks=books
+    )
+    similarity.write_ann_index(emb, flat, "pq", codebooks=books)
     qids = QUERY_IDS[:5]
     queries = [
         (r["vec_id"], list(r["embedding"]))
         for r in emb.filter(F.col("vec_id").isin(qids)).collect()
     ]
-    hybrid = similarity.ivfpq_topk_indexed(
+    hybrid = similarity.ann_topk_indexed(
         spark, hyb, queries, emb, k=3, nprobe=8
     ).collect()
-    flatpq = similarity.pq_topk_indexed(spark, flat, queries, emb, k=3).collect()
+    flatpq = similarity.ann_topk_indexed(spark, flat, queries, emb, k=3).collect()
     assert sorted(map(tuple, hybrid)) == sorted(map(tuple, flatpq))
     shutil.rmtree(hyb, ignore_errors=True)
     shutil.rmtree(flat, ignore_errors=True)
@@ -905,7 +911,7 @@ def test_ivfpq_partition_pruning_and_recall(spark):
     base = _scratch("ivfpq_idx")
     shutil.rmtree(base, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
-    similarity.write_ivfpq_index(emb, base, n_centroids=8)
+    similarity.write_ann_index(emb, base, "ivfpq", n_centroids=8)
     # layout: one directory per inverted list, payload is codes only
     lists = spark.read.parquet(os.path.join(base, "lists"))
     assert sorted(lists.columns) == [
@@ -917,7 +923,7 @@ def test_ivfpq_partition_pruning_and_recall(spark):
         (r["vec_id"], list(r["embedding"]))
         for r in emb.filter(F.col("vec_id").isin(qids)).collect()
     ]
-    idx_df = similarity.ivfpq_topk_indexed(spark, base, queries, emb, k=3)
+    idx_df = similarity.ann_topk_indexed(spark, base, queries, emb, k=3)
     plan = idx_df._jdf.queryExecution().explainString(
         idx_df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -951,22 +957,24 @@ def test_ivfpq_append_and_fold_loop(spark):
     batch = emb.filter(F.col("vec_id") % 5 == 4)
     cids_cmat = similarity._centroids(older, 8)
     books = similarity.pq_codebooks(older)
-    similarity.write_ivfpq_index(
-        older, base, n_centroids=8, centroids=cids_cmat, codebooks=books
+    similarity.write_ann_index(
+        older, base, "ivfpq", n_centroids=8, centroids=cids_cmat,
+        codebooks=books,
     )
-    similarity.append_ivfpq_index(batch.select("vec_id", "embedding"), base, 1)
+    similarity.append_ann_index(batch.select("vec_id", "embedding"), base, 1)
     # replay: same append_id overwrites its own partitions, no dupes
-    similarity.append_ivfpq_index(batch.select("vec_id", "embedding"), base, 1)
-    similarity.write_ivfpq_index(
-        emb, reb, n_centroids=8, centroids=cids_cmat, codebooks=books
+    similarity.append_ann_index(batch.select("vec_id", "embedding"), base, 1)
+    similarity.write_ann_index(
+        emb, reb, "ivfpq", n_centroids=8, centroids=cids_cmat,
+        codebooks=books,
     )
     qids = QUERY_IDS[:5]
     queries = [
         (r["vec_id"], list(r["embedding"]))
         for r in emb.filter(F.col("vec_id").isin(qids)).collect()
     ]
-    appended = similarity.ivfpq_topk_indexed(spark, base, queries, emb, k=3)
-    rebuilt = similarity.ivfpq_topk_indexed(spark, reb, queries, emb, k=3)
+    appended = similarity.ann_topk_indexed(spark, base, queries, emb, k=3)
+    rebuilt = similarity.ann_topk_indexed(spark, reb, queries, emb, k=3)
     assert sorted(map(tuple, appended.collect())) == sorted(
         map(tuple, rebuilt.collect())
     )
@@ -986,8 +994,8 @@ def test_ivfpq_append_and_fold_loop(spark):
         .withColumn("_change_type", F.lit("delete"))
         .unionByName(new_rows.withColumn("_change_type", F.lit("insert")))
     )
-    similarity.apply_changes_to_ivfpq_index(spark, base, changes, 2)
-    served = similarity.ivfpq_topk_indexed(
+    similarity.apply_changes_to_ann_index(spark, base, changes, 2)
+    served = similarity.ann_topk_indexed(
         spark,
         base,
         queries,
@@ -999,8 +1007,8 @@ def test_ivfpq_append_and_fold_loop(spark):
     q0 = [r for r in served if r.query_id == queries[0][0] and r.rk == 1]
     assert q0 and q0[0].vec_id == 8_000_000 and q0[0].cosine == 1.0
     # compaction folds generations back to gen 0 and purges tombstones
-    similarity.compact_ivfpq_index(spark, base)
-    post = similarity.ivfpq_topk_indexed(
+    similarity.compact_ann_index(spark, base)
+    post = similarity.ann_topk_indexed(
         spark,
         base,
         queries,
@@ -1103,11 +1111,13 @@ def test_ivfpq_residual_beats_flat_on_clustered(spark):
         p = _scratch(f"res_clustered_{mode}")
         paths[mode] = p
         shutil.rmtree(p, ignore_errors=True)
-        similarity.write_ivfpq_index(emb, p, n_centroids=16, residual=residual)
+        similarity.write_ann_index(
+            emb, p, "ivfpq_residual" if residual else "ivfpq", n_centroids=16
+        )
         assert similarity._stored_ivfpq_residual(spark, p) is residual
         got = {
             (r.query_id, r.vec_id)
-            for r in similarity.ivfpq_topk_indexed(
+            for r in similarity.ann_topk_indexed(
                 spark, p, queries, emb, k=3, nprobe=4, shortlist=4
             ).collect()
         }
@@ -1144,11 +1154,13 @@ def test_ivfpq_residual_full_probe_full_shortlist_equals_flat(spark):
     for mode, residual in (("flat", False), ("residual", True)):
         p = _scratch(f"res_fullprobe_{mode}")
         shutil.rmtree(p, ignore_errors=True)
-        similarity.write_ivfpq_index(emb, p, n_centroids=8, residual=residual)
+        similarity.write_ann_index(
+            emb, p, "ivfpq_residual" if residual else "ivfpq", n_centroids=8
+        )
         results[mode] = sorted(
             map(
                 tuple,
-                similarity.ivfpq_topk_indexed(
+                similarity.ann_topk_indexed(
                     spark, p, queries, emb, k=3, nprobe=8, shortlist=n
                 ).collect(),
             )
@@ -1164,7 +1176,7 @@ def test_ivfpq_residual_full_probe_full_shortlist_equals_flat(spark):
 
 @pytest.mark.slow
 def test_ivfpq_residual_append_respects_stored_mode(spark):
-    """append_ivfpq_index on a RESIDUAL index encodes the batch in
+    """append_ann_index on a RESIDUAL index encodes the batch in
     residual mode (read from meta, never passed by the caller): base
     residual build on 4/5 of the corpus + append of the held-out 1/5
     is query-equal to a one-shot residual rebuild with the same stored
@@ -1179,12 +1191,12 @@ def test_ivfpq_residual_append_respects_stored_mode(spark):
     emb = _clustered_fixture(spark, n=1000).cache()
     older = emb.filter(F.col("vec_id") % 5 != 4)
     batch = emb.filter(F.col("vec_id") % 5 == 4)
-    similarity.write_ivfpq_index(older, base, n_centroids=16, residual=True)
-    similarity.append_ivfpq_index(batch, base, 1)
+    similarity.write_ann_index(older, base, "ivfpq_residual", n_centroids=16)
+    similarity.append_ann_index(batch, base, 1)
     cq = similarity._stored_centroids(spark, base)
     books = similarity._stored_codebooks(spark, base)
-    similarity.write_ivfpq_index(
-        emb, reb, centroids=cq, codebooks=books, residual=True
+    similarity.write_ann_index(
+        emb, reb, "ivfpq_residual", centroids=cq, codebooks=books
     )
     qids = [0, 4, 9, 14]  # 4, 9, 14 land in the appended fifth's orbit
     queries = [
@@ -1192,10 +1204,10 @@ def test_ivfpq_residual_append_respects_stored_mode(spark):
         for r in emb.filter(F.col("vec_id").isin(qids)).collect()
     ]
     for shortlist in (1, 8):
-        got = similarity.ivfpq_topk_indexed(
+        got = similarity.ann_topk_indexed(
             spark, base, queries, emb, k=3, shortlist=shortlist
         )
-        want = similarity.ivfpq_topk_indexed(
+        want = similarity.ann_topk_indexed(
             spark, reb, queries, emb, k=3, shortlist=shortlist
         )
         assert sorted(map(tuple, got.collect())) == sorted(
@@ -1233,7 +1245,9 @@ def test_zero_vector_does_not_poison_index(spark):
     # refine=False mode; cover BOTH quantizer paths
     for kw in (dict(refine=False), dict(refine=True)):
         shutil.rmtree(base, ignore_errors=True)
-        similarity.write_ivfpq_index(poisoned, base, n_centroids=8, **kw)
+        similarity.write_ann_index(
+            poisoned, base, "ivfpq", n_centroids=8, **kw
+        )
         lists = spark.read.parquet(f"{base}/lists")
         assert lists.count() == poisoned.count()
         # no sentinel list; every centroid_id is a real quantizer id
@@ -1244,7 +1258,7 @@ def test_zero_vector_does_not_poison_index(spark):
             (r["vec_id"], list(r["embedding"]))
             for r in emb.filter(F.col("vec_id").isin(qids)).collect()
         ]
-        got = similarity.ivfpq_topk_indexed(
+        got = similarity.ann_topk_indexed(
             spark, base, queries, poisoned, k=3, nprobe=8
         ).collect()
         assert len(got) == 3 * len(queries)
@@ -1273,8 +1287,10 @@ def test_vector_store_rerank_equality_and_bucket_pruning(spark):
         shutil.rmtree(d, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
     books = similarity.pq_codebooks(emb)
-    similarity.write_pq_index(emb, flat, codebooks=books)
-    similarity.write_ivfpq_index(emb, hyb, n_centroids=8, codebooks=books)
+    similarity.write_ann_index(emb, flat, "pq", codebooks=books)
+    similarity.write_ann_index(
+        emb, hyb, "ivfpq", n_centroids=8, codebooks=books
+    )
     # 128 buckets: the fixture's ~150 shortlist ids then cover a
     # strict subset, so the pruning is OBSERVABLE (at 32 buckets
     # they'd cover every directory and the assert would be vacuous;
@@ -1294,19 +1310,19 @@ def test_vector_store_rerank_equality_and_bucket_pruning(spark):
     # equality must hold under residual ADC ordering as well
     res = _scratch("vs_res")
     shutil.rmtree(res, ignore_errors=True)
-    similarity.write_ivfpq_index(emb, res, n_centroids=8, residual=True)
+    similarity.write_ann_index(emb, res, "ivfpq_residual", n_centroids=8)
     serves = (
         # strict=True: shortlist must touch a strict subset of dirs
         # (the residual hybrid's per-list tables shortlist differently
         # and legitimately cover every existing dir on this fixture —
         # its leg pins equality + the PartitionFilter only)
-        (True, lambda **kw: similarity.pq_topk_indexed(
+        (True, lambda **kw: similarity.ann_topk_indexed(
             spark, flat, queries, k=3, **kw
         )),
-        (True, lambda **kw: similarity.ivfpq_topk_indexed(
+        (True, lambda **kw: similarity.ann_topk_indexed(
             spark, hyb, queries, k=3, **kw
         )),
-        (False, lambda **kw: similarity.ivfpq_topk_indexed(
+        (False, lambda **kw: similarity.ann_topk_indexed(
             spark, res, queries, k=3, **kw
         )),
     )
@@ -1333,11 +1349,11 @@ def test_vector_store_rerank_equality_and_bucket_pruning(spark):
             assert len(touched) < n_dirs, (len(touched), n_dirs)
     # exactly one re-rank source, validated before any job runs
     with pytest.raises(ValueError, match="exactly one"):
-        similarity.pq_topk_indexed(
+        similarity.ann_topk_indexed(
             spark, flat, queries, emb=emb, k=3, vector_store=store
         )
     with pytest.raises(ValueError, match="exactly one"):
-        similarity.pq_topk_indexed(spark, flat, queries, k=3)
+        similarity.ann_topk_indexed(spark, flat, queries, k=3)
     for d in (store, flat, hyb, res):
         shutil.rmtree(d, ignore_errors=True)
 
@@ -1370,7 +1386,7 @@ def test_vector_store_fold_replay_and_compact(spark):
         ).otherwise(F.col("embedding")),
     )
     books = similarity.pq_codebooks(emb)
-    similarity.write_pq_index(doctored, idx, codebooks=books)
+    similarity.write_ann_index(doctored, idx, "pq", codebooks=books)
     similarity.write_vector_store(doctored, tbl)
     ct = lambda df, t: df.withColumn("_change_type", F.lit(t))  # noqa: E731
     changes = (
@@ -1382,7 +1398,7 @@ def test_vector_store_fold_replay_and_compact(spark):
     with pytest.raises(ValueError, match="gen must be > 0"):
         similarity.apply_changes_to_vector_store(spark, changes, tbl, 0)
     for _ in range(2):  # at-least-once replay: same gen, same rows
-        similarity.apply_changes_to_pq_index(spark, idx, changes, 1)
+        similarity.apply_changes_to_ann_index(spark, idx, changes, 1)
         similarity.apply_changes_to_vector_store(spark, changes, tbl, 1)
     # direct resolution: update serves the NEW vector, delete is gone
     res = {
@@ -1400,7 +1416,7 @@ def test_vector_store_fold_replay_and_compact(spark):
     live = sorted(
         map(
             tuple,
-            similarity.pq_topk_indexed(
+            similarity.ann_topk_indexed(
                 spark, idx, queries, emb=final, k=3
             ).collect(),
         )
@@ -1408,7 +1424,7 @@ def test_vector_store_fold_replay_and_compact(spark):
     stored = sorted(
         map(
             tuple,
-            similarity.pq_topk_indexed(
+            similarity.ann_topk_indexed(
                 spark, idx, queries, vector_store=tbl, k=3
             ).collect(),
         )
@@ -1428,7 +1444,7 @@ def test_vector_store_fold_replay_and_compact(spark):
     stored2 = sorted(
         map(
             tuple,
-            similarity.pq_topk_indexed(
+            similarity.ann_topk_indexed(
                 spark, idx, queries, vector_store=tbl, k=3
             ).collect(),
         )
@@ -1476,7 +1492,7 @@ def test_concurrent_store_serves_raise_only_threshold(spark):
     for d in (store, flat):
         shutil.rmtree(d, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
-    similarity.write_pq_index(emb, flat)
+    similarity.write_ann_index(emb, flat, "pq")
     similarity.write_vector_store(emb, store, n_buckets=128)
     queries = [
         (r["vec_id"], list(r["embedding"]))
@@ -1485,7 +1501,7 @@ def test_concurrent_store_serves_raise_only_threshold(spark):
     live = sorted(
         map(
             tuple,
-            similarity.pq_topk_indexed(
+            similarity.ann_topk_indexed(
                 spark, flat, queries, emb=emb, k=3
             ).collect(),
         )
@@ -1495,7 +1511,7 @@ def test_concurrent_store_serves_raise_only_threshold(spark):
         return sorted(
             map(
                 tuple,
-                similarity.pq_topk_indexed(
+                similarity.ann_topk_indexed(
                     spark, flat, queries, k=3, vector_store=store
                 ).collect(),
             )
@@ -1534,7 +1550,7 @@ def test_compact_vector_store_crash_recovery(spark):
     for d in (tbl, idx):
         shutil.rmtree(d, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
-    similarity.write_pq_index(emb, idx)
+    similarity.write_ann_index(emb, idx, "pq")
     similarity.write_vector_store(emb, tbl, n_buckets=16)
     queries = [
         (r["vec_id"], list(r["embedding"]))
@@ -1543,7 +1559,7 @@ def test_compact_vector_store_crash_recovery(spark):
     serve = lambda: sorted(  # noqa: E731
         map(
             tuple,
-            similarity.pq_topk_indexed(
+            similarity.ann_topk_indexed(
                 spark, idx, queries, k=3, vector_store=tbl
             ).collect(),
         )
@@ -1684,8 +1700,8 @@ def test_flat_tier_bulk_serves_equal_latency_loops(spark):
     for d in (pq, ivf, store):
         shutil.rmtree(d, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
-    similarity.write_pq_index(emb, pq)
-    similarity.write_ivf_index(emb, ivf, n_centroids=8)
+    similarity.write_ann_index(emb, pq, "pq")
+    similarity.write_ann_index(emb, ivf, "ivf", n_centroids=8)
     similarity.write_vector_store(emb, store, n_buckets=32)
     qids = QUERY_IDS[:6]
     queries = [
@@ -1715,7 +1731,7 @@ def test_flat_tier_bulk_serves_equal_latency_loops(spark):
         want = sorted(
             map(
                 tuple,
-                similarity.pq_topk_indexed(
+                similarity.ann_topk_indexed(
                     spark, pq, queries, k=3, **kw
                 ).collect(),
             )
@@ -1723,7 +1739,7 @@ def test_flat_tier_bulk_serves_equal_latency_loops(spark):
         got = sorted(
             map(
                 tuple,
-                similarity.pq_topk_bulk(
+                similarity.ann_topk_bulk(
                     spark, pq, qframe, k=3, **bulk_kw
                 ).collect(),
             )
@@ -1733,7 +1749,7 @@ def test_flat_tier_bulk_serves_equal_latency_loops(spark):
         want = sorted(
             map(
                 tuple,
-                similarity.ivf_topk_indexed(
+                similarity.ann_topk_indexed(
                     spark, ivf, queries, k=3, **kw
                 ).collect(),
             )
@@ -1741,16 +1757,16 @@ def test_flat_tier_bulk_serves_equal_latency_loops(spark):
         got = sorted(
             map(
                 tuple,
-                similarity.ivf_topk_bulk(
+                similarity.ann_topk_bulk(
                     spark, ivf, qframe, k=3, **kw
                 ).collect(),
             )
         )
         assert got == want and got, kw.keys()
     with pytest.raises(ValueError, match="exactly one"):
-        similarity.pq_topk_bulk(spark, pq, qframe, k=3)
+        similarity.ann_topk_bulk(spark, pq, qframe, k=3)
     with pytest.raises(ValueError, match="exactly one"):
-        similarity.pq_topk_bulk(
+        similarity.ann_topk_bulk(
             spark, pq, qframe, emb=emb, k=3, vector_store=store
         )
     for d in (pq, ivf, store):
@@ -1777,8 +1793,8 @@ def test_ivfpq_bulk_serve_equals_latency_loop(spark):
     for d in (hyb, res, store):
         shutil.rmtree(d, ignore_errors=True)
     emb = load_table(spark, SF_CHECK, "embeddings")
-    similarity.write_ivfpq_index(emb, hyb, n_centroids=8)
-    similarity.write_ivfpq_index(emb, res, n_centroids=8, residual=True)
+    similarity.write_ann_index(emb, hyb, "ivfpq", n_centroids=8)
+    similarity.write_ann_index(emb, res, "ivfpq_residual", n_centroids=8)
     similarity.write_vector_store(emb, store, n_buckets=32)
     qids = QUERY_IDS[:6]
     queries = [
@@ -1797,7 +1813,7 @@ def test_ivfpq_bulk_serve_equals_latency_loop(spark):
             want = sorted(
                 map(
                     tuple,
-                    similarity.ivfpq_topk_indexed(
+                    similarity.ann_topk_indexed(
                         spark, path, queries, k=3, **kw
                     ).collect(),
                 )
@@ -1805,7 +1821,7 @@ def test_ivfpq_bulk_serve_equals_latency_loop(spark):
             got = sorted(
                 map(
                     tuple,
-                    similarity.ivfpq_topk_bulk(
+                    similarity.ann_topk_bulk(
                         spark, path, qframe, k=3, **kw
                     ).collect(),
                 )
@@ -1818,7 +1834,7 @@ def test_ivfpq_bulk_serve_equals_latency_loop(spark):
     want = sorted(
         map(
             tuple,
-            similarity.ivfpq_topk_indexed(
+            similarity.ann_topk_indexed(
                 spark, hyb, queries, k=3, vector_store=store
             ).collect(),
         )
@@ -1826,17 +1842,54 @@ def test_ivfpq_bulk_serve_equals_latency_loop(spark):
     got = sorted(
         map(
             tuple,
-            similarity.ivfpq_topk_bulk(
+            similarity.ann_topk_bulk(
                 spark, hyb, qframe, k=3, vector_store=store, prune_max_ids=0
             ).collect(),
         )
     )
     assert got == want and got
     with pytest.raises(ValueError, match="exactly one"):
-        similarity.ivfpq_topk_bulk(spark, hyb, qframe, k=3)
+        similarity.ann_topk_bulk(spark, hyb, qframe, k=3)
     with pytest.raises(ValueError, match="exactly one"):
-        similarity.ivfpq_topk_bulk(
+        similarity.ann_topk_bulk(
             spark, hyb, qframe, emb=emb, k=3, vector_store=store
         )
     for d in (hyb, res, store):
         shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("kind", similarity.ANN_KINDS)
+def test_ann_index_kind_read_from_artifacts(spark, tmp_path, kind):
+    """Every call after ``write_ann_index`` reads the index kind back
+    from the artifacts under the path: each kind is detected as
+    itself; the same path rebuilt as IVF (foreign ``codebooks/`` and
+    ``meta/`` removed by the write) serves as IVF, equal to a fresh
+    IVF index under the same quantizer; ``emb=`` on an IVF index
+    raises (its lists carry the raw vectors); a directory that holds
+    no index raises."""
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    queries = [
+        (r["vec_id"], list(r["embedding"]))
+        for r in emb.filter(F.col("vec_id").isin(0, 1)).collect()
+    ]
+    path, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
+    similarity.write_ann_index(emb, path, kind, n_centroids=4)
+    assert similarity._index_kind(spark, path) == kind
+
+    cq = (
+        similarity._stored_centroids(spark, path)
+        if kind != "pq"
+        else similarity._centroids(emb, 4)
+    )
+    similarity.write_ann_index(emb, path, "ivf", centroids=cq)
+    similarity.write_ann_index(emb, fresh, "ivf", centroids=cq)
+    assert similarity._index_kind(spark, path) == "ivf"
+    got = similarity.ann_topk_indexed(spark, path, queries, k=3).collect()
+    want = similarity.ann_topk_indexed(spark, fresh, queries, k=3).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert len(got) == 3 * len(queries)
+
+    with pytest.raises(ValueError, match="IVF index"):
+        similarity.ann_topk_indexed(spark, path, queries, emb, k=3)
+    with pytest.raises(ValueError, match="no ANN index"):
+        similarity.ann_topk_indexed(spark, str(tmp_path), queries, k=3)

@@ -430,7 +430,7 @@ def test_cdf_stream_drives_index_fold(spark, tmp_path):
     """The full incremental-serving loop, END TO END and streaming:
     lakehouse merges → lakehouse_cdf micro-batches → foreachBatch
     folds each batch into a persisted IVF index
-    (apply_changes_to_ivf_index, gen = epoch id) → probes equal a
+    (apply_changes_to_ann_index, gen = epoch id) → probes equal a
     same-quantizer rebuild from the live table. This is the
     production wiring the pieces individually pin: checkpointed
     exactly-once offsets upstream, replay-idempotent folds
@@ -461,9 +461,11 @@ def test_cdf_stream_drives_index_fold(spark, tmp_path):
         emb0.filter(F.col("vec_id") < 2).localCheckpoint(),
         key_cols=["vec_id"], partition_cols=["pt"], archive=True,
     )
-    similarity.write_ivf_index(
+    similarity.write_ann_index(
         read_partitioned(spark, path).select("vec_id", "embedding"),
-        ipath, n_centroids=8,
+        ipath,
+        "ivf",
+        n_centroids=8,
     )
     # c1: delete a slice; c2: rewrite some vectors + insert new ids
     merge_upsert(
@@ -489,7 +491,7 @@ def test_cdf_stream_drives_index_fold(spark, tmp_path):
 
     def fold(batch_df, epoch_id):
         if batch_df.take(1):
-            similarity.apply_changes_to_ivf_index(
+            similarity.apply_changes_to_ann_index(
                 spark, ipath, batch_df, append_id=int(epoch_id) + 1
             )
 
@@ -512,22 +514,24 @@ def test_cdf_stream_drives_index_fold(spark, tmp_path):
         for r in emb0.filter(F.col("vec_id").isin(5, 50, 200)).collect()
     ]
     got = sorted(
-        map(tuple, similarity.ivf_topk_indexed(spark, ipath, queries, k=3).collect())
+        map(tuple, similarity.ann_topk_indexed(spark, ipath, queries, k=3).collect())
     )
     # oracle: a fresh index over the live table under the SAME quantizer
     cq = similarity._stored_centroids(spark, ipath)
     rpath = str(tmp_path / "ivf_rebuild")
-    similarity.write_ivf_index(
+    similarity.write_ann_index(
         read_partitioned(spark, path).select("vec_id", "embedding"),
-        rpath, centroids=cq,
+        rpath,
+        "ivf",
+        centroids=cq,
     )
     want = sorted(
-        map(tuple, similarity.ivf_topk_indexed(spark, rpath, queries, k=3).collect())
+        map(tuple, similarity.ann_topk_indexed(spark, rpath, queries, k=3).collect())
     )
     assert got == want
     # the folded index must also hide every deleted id at full depth
     dead = {r.vec_id for r in emb0.filter(F.col("vec_id") % 13 == 0).collect()}
-    deep = similarity.ivf_topk_indexed(spark, ipath, queries, k=10_000, nprobe=8)
+    deep = similarity.ann_topk_indexed(spark, ipath, queries, k=10_000, nprobe=8)
     assert not ({r.vec_id for r in deep.collect()} & dead)
 
 

@@ -22,9 +22,7 @@ from map_reduce_sf_crime_spark.sources.lakehouse import (
 )
 from map_reduce_sf_crime_spark.sources.parquet import load_table
 from map_reduce_sf_crime_spark.streaming.index_maintenance import (
-    maintain_ivf_index,
-    maintain_ivfpq_index,
-    maintain_pq_index,
+    maintain_ann_index,
     maintain_vector_store,
 )
 
@@ -66,14 +64,14 @@ def test_ann_maintenance_loops_serve_live_corpus(spark, tmp_path):
         n: str(tmp_path / f"idx_{n}")
         for n in ("ivf", "pq", "ivfpq", "ivfpq_res")
     }
-    similarity.write_ivf_index(snapshot, idx["ivf"], n_centroids=8)
-    similarity.write_pq_index(snapshot, idx["pq"])
-    similarity.write_ivfpq_index(snapshot, idx["ivfpq"], n_centroids=8)
+    similarity.write_ann_index(snapshot, idx["ivf"], "ivf", n_centroids=8)
+    similarity.write_ann_index(snapshot, idx["pq"], "pq")
+    similarity.write_ann_index(snapshot, idx["ivfpq"], "ivfpq", n_centroids=8)
     # round 8: the residual-encoded hybrid rides the SAME loop — the
     # streamed folds must pick the mode up from the stored meta, not
     # from any caller argument
-    similarity.write_ivfpq_index(
-        snapshot, idx["ivfpq_res"], n_centroids=8, residual=True
+    similarity.write_ann_index(
+        snapshot, idx["ivfpq_res"], "ivfpq_residual", n_centroids=8
     )
     # round 8 (ANN10): the re-rank store is the fourth artifact the
     # embeddings feed keeps live — base build MUST precede the churn
@@ -94,10 +92,10 @@ def test_ann_maintenance_loops_serve_live_corpus(spark, tmp_path):
     )
 
     loops = {
-        "ivf": maintain_ivf_index,
-        "pq": maintain_pq_index,
-        "ivfpq": maintain_ivfpq_index,
-        "ivfpq_res": maintain_ivfpq_index,
+        "ivf": maintain_ann_index,
+        "pq": maintain_ann_index,
+        "ivfpq": maintain_ann_index,
+        "ivfpq_res": maintain_ann_index,
     }
     for name, loop in loops.items():
         q = loop(
@@ -122,27 +120,28 @@ def test_ann_maintenance_loops_serve_live_corpus(spark, tmp_path):
     books = {n: similarity._stored_codebooks(spark, idx[n])
              for n in ("pq", "ivfpq", "ivfpq_res")}
     reb = {n: str(tmp_path / f"reb_{n}") for n in idx}
-    similarity.write_ivf_index(final, reb["ivf"], centroids=cents["ivf"])
-    similarity.write_pq_index(final, reb["pq"], codebooks=books["pq"])
-    similarity.write_ivfpq_index(
-        final, reb["ivfpq"],
+    similarity.write_ann_index(
+        final, reb["ivf"], "ivf", centroids=cents["ivf"]
+    )
+    similarity.write_ann_index(final, reb["pq"], "pq", codebooks=books["pq"])
+    similarity.write_ann_index(
+        final, reb["ivfpq"], "ivfpq",
         centroids=cents["ivfpq"], codebooks=books["ivfpq"],
     )
-    similarity.write_ivfpq_index(
-        final, reb["ivfpq_res"],
+    similarity.write_ann_index(
+        final, reb["ivfpq_res"], "ivfpq_residual",
         centroids=cents["ivfpq_res"], codebooks=books["ivfpq_res"],
-        residual=True,
     )
     assert similarity._stored_ivfpq_residual(spark, idx["ivfpq_res"])
     serve = {
-        "ivf": lambda p: similarity.ivf_topk_indexed(spark, p, queries, k=3),
-        "pq": lambda p: similarity.pq_topk_indexed(
+        "ivf": lambda p: similarity.ann_topk_indexed(spark, p, queries, k=3),
+        "pq": lambda p: similarity.ann_topk_indexed(
             spark, p, queries, final, k=3
         ),
-        "ivfpq": lambda p: similarity.ivfpq_topk_indexed(
+        "ivfpq": lambda p: similarity.ann_topk_indexed(
             spark, p, queries, final, k=3
         ),
-        "ivfpq_res": lambda p: similarity.ivfpq_topk_indexed(
+        "ivfpq_res": lambda p: similarity.ann_topk_indexed(
             spark, p, queries, final, k=3
         ),
     }
@@ -162,7 +161,7 @@ def test_ann_maintenance_loops_serve_live_corpus(spark, tmp_path):
     # frame: deleted phantoms tombstoned, streamed inserts' vectors
     # really present (a missing insert would silently drop its row
     # from the store-served result — caught here by the equality)
-    via_store = similarity.pq_topk_indexed(
+    via_store = similarity.ann_topk_indexed(
         spark, idx["pq"], queries, vector_store=store_path, k=3
     ).collect()
     assert sorted(map(tuple, via_store)) == sorted(
@@ -176,23 +175,20 @@ def test_ann_maintenance_loops_serve_live_corpus(spark, tmp_path):
     # discovered, store folds not resolved — would split them)
     qframe = spark.createDataFrame(queries, "query_id long, embedding array<double>")
     for name in ("ivfpq", "ivfpq_res", "pq"):
-        bulk = (
-            similarity.pq_topk_bulk
-            if name == "pq"
-            else similarity.ivfpq_topk_bulk
-        )
         rebuilt = sorted(map(tuple, serve[name](reb[name]).collect()))
         for src in ({"emb": final}, {"vector_store": store_path}):
             got = sorted(
                 map(
                     tuple,
-                    bulk(spark, idx[name], qframe, k=3, **src).collect(),
+                    similarity.ann_topk_bulk(
+                        spark, idx[name], qframe, k=3, **src
+                    ).collect(),
                 )
             )
             assert got == rebuilt and got, (name, src.keys())
     assert sorted(
         map(
             tuple,
-            similarity.ivf_topk_bulk(spark, idx["ivf"], qframe, k=3).collect(),
+            similarity.ann_topk_bulk(spark, idx["ivf"], qframe, k=3).collect(),
         )
     ) == sorted(map(tuple, serve["ivf"](reb["ivf"]).collect()))
